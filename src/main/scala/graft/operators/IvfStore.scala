@@ -286,10 +286,12 @@ object IvfStore {
     val assigned = KMeans.assign(delta, cents, vecCol)
       .select(col(idCol), col(vecCol), col("cell"))
       .withColumn("dt", lit(day))
-    // clustered write (round 18, guide §6): one AQE-sized file set per
-    // (dt, cell) instead of one file per scan-task × cell — the commit
-    // and every later probe scan pay per file (measured: Q146Prof
-    // append phases, OPTIMIZATION_r18.md)
+    // clustered write (guide §6): ~one file per (dt, cell) at the gate
+    // SF instead of one file per scan-task × cell — the commit and
+    // every later probe scan pay per file (measured in commit 174aba3:
+    // Q146Prof append phases 1.3-1.4 -> 0.6-0.8 s). The clustering is
+    // a narrow coalesce, so append adds no exchange and stays map-only
+    // as the object scaladoc promises
     PartitionedLayout.overwriteClustered(
       assigned, s"$root/cells", Seq("dt", "cell"))
     // PQ-enabled store: encode the day inline (from the just-written

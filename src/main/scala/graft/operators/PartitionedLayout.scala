@@ -44,23 +44,34 @@ object PartitionedLayout {
       .partitionBy(cols: _*)
       .parquet(dir)
 
-  /** [[overwritePartitions]] with the rows CLUSTERED by the partition
-    * columns first (round 18, guide §6's small-files rule): without
-    * it every write task emits one file per partition value it
-    * holds — a 32-task delta over 8 cells commits 256 tiny files per
-    * day, and the commit protocol + every later scan pays per file.
-    * REBALANCE rather than `repartition`: AQE both COALESCES the
-    * gate-SF trickle into few advisory-sized partitions (~1 file per
-    * partition value) and SPLITS a 100 GB day/cell into many, so file
-    * sizes track `spark.sql.adaptive.advisoryPartitionSizeInBytes` at
-    * every scale with no constant tuned to either regime. Callers
-    * that need an intra-file SORT order (TextIndexStore's word-sorted
-    * postings) keep their own pre-shaped write path — a rebalance
-    * here would sit after their sort and destroy it. */
-  def overwriteClustered(df: DataFrame, dir: String, cols: Seq[String]): Unit =
-    overwritePartitions(
-      df.hint("rebalance", cols.map(org.apache.spark.sql.functions.col): _*),
-      dir, cols)
+  /** [[overwritePartitions]] with the rows CLUSTERED into few files
+    * per partition value (guide §6's small-files rule): without it
+    * every write task emits one file per partition value it holds — a
+    * 32-task delta over 8 cells commits 256 tiny files per day, and
+    * the commit protocol + every later scan pays per file.
+    *
+    * Clustering is a narrow `coalesce(n)` with
+    * `n = max(1, ⌈plan size estimate / advisoryPartitionSizeInBytes⌉)`
+    * (the optimizer's `sizeInBytes`, the session's own AQE advisory
+    * size; no knob of its own). `coalesce` never raises the partition
+    * count and adds no exchange, so the write stays MAP-ONLY at every
+    * scale: at the gate SF the day's trickle lands in one task and
+    * ~one file per partition value; at 100 TB/day `n` exceeds the
+    * scan's task count and the coalesce is a no-op. REBALANCE (or
+    * `repartition`) is deliberately NOT used: it is a full-data
+    * exchange of the whole day on the daily ingest path, and
+    * `IvfStore.append` (cells and PQ codes) is documented as map-only;
+    * `DedupStore.commitDay` shares this write and pays the same
+    * exchange under a REBALANCE. Callers that need an intra-file SORT
+    * order (TextIndexStore's word-sorted postings) keep their own
+    * pre-shaped write path. */
+  def overwriteClustered(df: DataFrame, dir: String, cols: Seq[String]): Unit = {
+    val advisory = df.sparkSession.sessionState.conf.getConf(
+      org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    val size = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val n = ((size + advisory - 1) / advisory).max(1).min(Int.MaxValue).toInt
+    overwritePartitions(df.coalesce(n), dir, cols)
+  }
 
   /** Read the layout with an EXPLICIT schema. Explicit for two
     * reasons: an empty layout (day-zero: zero input rows wrote zero

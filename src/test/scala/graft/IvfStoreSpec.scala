@@ -237,7 +237,8 @@ class IvfStoreSpec extends AnyFunSuite with SparkSpec {
     assert(cells.nonEmpty)
     // the old write shape produced up to 8 tasks x |cells| files; the
     // clustered write commits at most ~1 file per populated cell at
-    // this scale (AQE coalesces the rebalanced delta to one partition)
+    // this scale (the day's bytes are far under the advisory size, so
+    // the write coalesces the delta to one task)
     assert(files.length <= cells.length,
       s"expected <= ${cells.length} files (one per populated cell), " +
         s"got ${files.length}")

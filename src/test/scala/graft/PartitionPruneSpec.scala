@@ -2,15 +2,22 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.execution.FileSourceScanExec
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.PartitionedLayout
 
 /** PartitionedLayout: static partition pruning measured by FILES READ
   * (not just the plan string), dynamic partition overwrite leaving
-  * sibling partitions byte-untouched, and day-zero totality. */
+  * sibling partitions byte-untouched, day-zero totality, and the
+  * clustered overwrite's file count without an exchange. */
 class PartitionPruneSpec extends AnyFunSuite with SparkSpec {
 
   private def layoutDf = {
@@ -79,5 +86,65 @@ class PartitionPruneSpec extends AnyFunSuite with SparkSpec {
     val out = Files.createTempDirectory("ppl-empty").toString
     PartitionedLayout.writePartitioned(layoutDf.limit(0), out, Seq("dt"))
     assert(PartitionedLayout.read(spark, out, layoutDf.schema).count() === 0L)
+  }
+
+  /** 8 map tasks × 4 `dt` values: an unclustered write commits up to
+    * 32 files. */
+  private def eightTaskDf =
+    spark.range(0, 2000, 1, 8).withColumn("dt",
+      concat(lit("2024-01-0"), (col("id") % 4 + 1).cast("string")))
+
+  private object Aqe extends AdaptiveSparkPlanHelper
+
+  /** Shuffle exchanges in the physical plans of the writes `body` runs
+    * (descending into AQE stages). */
+  private def exchangesOfWrites(body: => Unit): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan): Unit
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      body
+      org.apache.spark.graft.ListenerBridge.flush(spark.sparkContext, 30000L)
+    } finally spark.listenerManager.unregister(l)
+    assert(!plans.isEmpty, "no write plan captured")
+    plans.asScala.toSeq.flatMap(p =>
+      Aqe.collect(p) { case e: ShuffleExchangeLike => e: SparkPlan })
+  }
+
+  test("clustered overwrite: one file per partition value, no exchange in the write plan") {
+    val days = (1 to 4).map(i => s"2024-01-0$i")
+    val out = Files.createTempDirectory("ppl-clustered").toString
+    val ex = exchangesOfWrites {
+      PartitionedLayout.overwriteClustered(eightTaskDf, out, Seq("dt"))
+    }
+    assert(ex.isEmpty, s"clustered write planned an exchange:\n${ex.mkString("\n")}")
+    // ~16 KB against the 64 MB advisory size: one task, one file per dt
+    assert(days.map(partFiles(out, _).size) === Seq(1, 1, 1, 1))
+    assert(spark.read.parquet(out).count() === 2000L)
+    // the detector is not vacuous: the REBALANCE shape it replaced
+    // is a full-data exchange
+    val rebalanced = Files.createTempDirectory("ppl-rebalanced").toString
+    assert(exchangesOfWrites {
+      PartitionedLayout.overwritePartitions(
+        eightTaskDf.hint("rebalance", col("dt")), rebalanced, Seq("dt"))
+    }.nonEmpty, "the exchange detector missed a REBALANCE write")
+  }
+
+  test("clustered overwrite keeps every scan task when the data exceeds the advisory size") {
+    // the 100 TB/day shape in miniature: the estimate over the
+    // advisory size exceeds the scan's 8 tasks, so the coalesce is a
+    // no-op and each task writes its own file per dt
+    val key = SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES.key
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "1000")
+    val out = Files.createTempDirectory("ppl-clustered-big").toString
+    try PartitionedLayout.overwriteClustered(eightTaskDf, out, Seq("dt"))
+    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert((1 to 4).map(i => partFiles(out, s"2024-01-0$i").size) ===
+      Seq(8, 8, 8, 8))
   }
 }
