@@ -25,7 +25,7 @@ import org.apache.spark.sql.SparkSession
   *    taking the median, so one contended pass out of five cannot
   *    touch the reported value. The plain median and the per-query
   *    minimum ride along in the DIAGNOSTIC channel (stderr +
-  *    BENCH_DETAIL.json — NOT the stdout line, which must stay compact
+  *    the detail file — NOT the stdout line, which must stay compact
   *    enough for the driver's parser; see the round-8 note below) — on
   *    an idle box all three agree within noise, and min is the best
   *    available estimate of the engine's true cost when they don't
@@ -175,14 +175,20 @@ object Bench {
 
     val detail = BenchReport.renderDetail(samples)
     System.err.println(s"[bench-detail] $detail")
-    // cwd-relative (overridable): a machine-specific absolute path would
-    // silently drop the diagnostic artifact on any other checkout/box
+    // default: the git-ignored `target/BENCH_DETAIL.json`, cwd-relative
+    // so it lands in any checkout — the repo-root BENCH_DETAIL.json is
+    // the tracked full-suite record, which a focused
+    // SPARK_GRAFT_BENCH_ONLY run must not overwrite; name it in
+    // SPARK_GRAFT_DETAIL_FILE to re-record it
     val detailPath = sys.env.get("SPARK_GRAFT_DETAIL_FILE")
       .map(java.nio.file.Paths.get(_))
       .getOrElse(java.nio.file.Paths.get(
-        sys.props("user.dir"), "BENCH_DETAIL.json"))
-    try java.nio.file.Files.writeString(detailPath, detail + "\n")
-    catch { case e: Exception =>
+        sys.props("user.dir"), "target", "BENCH_DETAIL.json"))
+    try {
+      Option(detailPath.toAbsolutePath.getParent)
+        .foreach(java.nio.file.Files.createDirectories(_))
+      java.nio.file.Files.writeString(detailPath, detail + "\n")
+    } catch { case e: Exception =>
       System.err.println(s"[bench] detail file not written: ${e.getMessage}")
     }
 
@@ -197,7 +203,9 @@ object Bench {
   * the stdout line past 5 KB and the driver's parser — fine with every
   * ≤2.5 KB line through round 5 — recorded parsed=null for rounds 6-7.
   * The stdout line is the RECORDED artifact; it must stay compact. The
-  * detail JSON carries everything else to stderr + BENCH_DETAIL.json. */
+  * detail JSON carries everything else to stderr + the detail file
+  * (`target/BENCH_DETAIL.json` unless `SPARK_GRAFT_DETAIL_FILE` names
+  * another path). */
 object BenchReport {
   import BenchStats.{median, trimmed}
 

@@ -1,6 +1,6 @@
 package graft.jobs
 
-import graft.operators.{DedupStore, IncrementalContainment, LshGuard}
+import graft.operators.{DedupStore, FsckFinding, IncrementalContainment, LshGuard}
 import graft.sources.TfRecordSink
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -293,7 +293,7 @@ object IncrementalCurationJob {
     * right before [[compactStores]] or after a restore. Absent roots
     * (day-zero stores) yield no findings. */
   def fsckStores(spark: SparkSession, root: String,
-      deep: Boolean = false): Map[String, Seq[DedupStore.FsckFinding]] =
+      deep: Boolean = false): Map[String, Seq[FsckFinding]] =
     StoreRoots.map { s0 =>
       s0 -> DedupStore.fsck(spark, s"$root/$s0", deep)
     }.toMap
@@ -302,7 +302,7 @@ object IncrementalCurationJob {
     * ([[graft.operators.IvfStore.fsck]] — same finding type, keyed
     * "ivf"), for pipelines running with `ivfRoot`. */
   def fsckStoresWithIvf(spark: SparkSession, root: String, ivfRoot: String,
-      deep: Boolean = false): Map[String, Seq[DedupStore.FsckFinding]] =
+      deep: Boolean = false): Map[String, Seq[FsckFinding]] =
     fsckStores(spark, root, deep) +
       ("ivf" -> graft.operators.IvfStore.fsck(spark, ivfRoot, deep = deep))
 

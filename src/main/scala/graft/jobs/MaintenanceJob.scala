@@ -3,7 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{DedupStore, IvfStore}
+import graft.operators.{DedupStore, FsckFinding, IvfStore}
 
 /** The store-maintenance surface as ONE cron entry
   * (`--job=maintenanceJob`) — round 13's answer to "an operator today
@@ -23,7 +23,7 @@ import graft.operators.{DedupStore, IvfStore}
   *                maintenance cadence, so ingestCosine never pays the
   *                archive re-band daily; `in-sync` when nothing to do,
   *                empty for absent roots, `failed: …` on a real error
-  *   fsck         every [[DedupStore.FsckFinding]] across the five
+  *   fsck         every [[FsckFinding]] across the five
   *                dedup roots (+ the IVF root keyed "ivf", + the
   *                retrieval root keyed "text_index" — which carries
   *                NO monitors: no trained state to drift, no recall
@@ -107,7 +107,7 @@ object MaintenanceJob {
   }
 
   private def findingsFrame(spark: SparkSession,
-      byStore: Map[String, Seq[DedupStore.FsckFinding]]): DataFrame = {
+      byStore: Map[String, Seq[FsckFinding]]): DataFrame = {
     import spark.implicits._
     byStore.toSeq.sortBy(_._1).flatMap { case (s0, fs0) =>
       fs0.map(f => (s0, f.severity, f.check, f.subject, f.detail))

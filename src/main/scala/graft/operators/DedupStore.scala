@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
@@ -30,14 +30,15 @@ import org.apache.spark.sql.types.StringType
   * dir is immutable once committed; readers take the union of
   * committed days, pruned at the file index.
   *
-  * Commit protocol: both tables' `dt=DAY` partitions are written
-  * COMPLETELY (dynamic partition overwrite — a re-run replaces
-  * exactly that day's files), then the day's `_committed/DAY` marker
-  * publishes via tmp + atomic OVERWRITE rename. Readers load ONLY
-  * marker-committed days (the `dt IN (committed)` filter prunes
-  * uncommitted debris out of the scan at the file index), so a crash
-  * between the table writes and the marker leaves the day invisible
-  * — re-ingest it idempotently.
+  * Commit protocol ([[DayStore.commitDay]], shared with [[IvfStore]]
+  * and [[TextIndexStore]]): the day's `_committed/DAY` marker is
+  * retracted and its `dt=DAY` partitions cleared, the tables are
+  * written COMPLETELY, then the marker publishes via tmp + atomic
+  * OVERWRITE rename. Readers load ONLY marker-committed days (the
+  * `dt IN (committed)` filter prunes uncommitted debris out of the
+  * scan at the file index), so a crash anywhere inside the write —
+  * first ingest or re-ingest — leaves the day invisible; re-ingest
+  * it idempotently.
   *
   * Idempotent re-runs: [[ingest]] excludes the day being ingested
   * from the store it reads, so re-running a committed day does NOT
@@ -60,81 +61,37 @@ import org.apache.spark.sql.types.StringType
   * unique across all days (the operator's contract). */
 object DedupStore {
 
-  private val MarkerDir = "_committed"
+  /** The marker-protocol kernel: `_committed/` markers over every
+    * table dir the root holds. A compaction marker's content lists the
+    * days it replaces, so one rename commits the merged partition and
+    * un-commits the originals ([[compact]]). */
+  private val dayStore = new DayStore("_committed", storeTables,
+    // a folded day's rows live in the merged partition, where the
+    // ingest's own-day exclusion can no longer reach them — the re-run
+    // would self-suppress to zero survivors and the next sweep would
+    // make the loss permanent; refusing turns it into a signal
+    (day, root) => s"day '$day' of store '$root' was already folded into a " +
+      "compacted partition; re-ingesting it cannot exclude its own prior rows " +
+      "and would self-suppress to zero survivors. Re-ingest is only " +
+      "supported inside compact()'s keepDays retention window — size " +
+      "keepDays to cover the longest replay horizon.")
 
-  /** Reserved prefix for COMPACTION markers (see [[compact]]): a
-    * `merged-*` marker is committed like a day marker but its CONTENT
-    * lists the day names it replaces, so one atomic marker rename
-    * simultaneously commits the merged partition and un-commits the
-    * replaced days — at no instant does a reader see fewer (or
-    * doubled) rows. Normal ingests must not use the prefix
-    * ([[requireDay]] rejects it). */
-  private val MergedPrefix = MarkerProtocol.MergedPrefix
-
-  private def fc(spark: SparkSession, root: String) =
-    FileContext.getFileContext(
-      new Path(root).toUri, spark.sparkContext.hadoopConfiguration)
-
-  private def fs(spark: SparkSession, root: String) =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def readMarker(f: org.apache.hadoop.fs.FileSystem, p: Path): Seq[String] =
-    MarkerProtocol.readMarker(f, p)
-
-  /** (all marker names, the subset replaced by committed compactions)
-    * — delegates to the [[MarkerProtocol]] shared copy (round 12). */
-  private def markerState(f: org.apache.hadoop.fs.FileSystem,
-      root: String): (Seq[String], Set[String]) =
-    MarkerProtocol.markerState(f, new Path(root, MarkerDir))
+  private def fs(spark: SparkSession, root: String) = dayStore.fs(spark, root)
 
   /** Days whose marker committed, sorted — EXCLUDING days a committed
     * `merged-*` compaction marker has replaced (their rows live in the
     * merged partition; the originals are garbage awaiting [[compact]]'s
     * sweep and must not double-count). */
-  def committedDays(spark: SparkSession, root: String): Seq[String] = {
-    val (names, replaced) = markerState(fs(spark, root), root)
-    names.filterNot(replaced).sorted
-  }
+  def committedDays(spark: SparkSession, root: String): Seq[String] =
+    dayStore.committedDays(spark, root)
 
   /** Every REAL day name the store has ever committed — the live ones
     * AND those a compaction folded into a merged partition (whose own
     * markers are excluded; they are partitions, not days). The
     * streaming jobs' upgrade guard reads this: a legacy-format day
     * name is a hazard whether or not it has since been compacted. */
-  def knownDays(spark: SparkSession, root: String): Seq[String] = {
-    val (names, replaced) = markerState(fs(spark, root), root)
-    (names ++ replaced).filterNot(_.startsWith(MergedPrefix)).distinct.sorted
-  }
-
-  /** Refuse an ingest of a day that a committed compaction already
-    * folded (round-11 hardening): the day's rows live in the merged
-    * partition, where the ingest's own-day exclusion can no longer
-    * reach them — the re-run would silently self-suppress to zero
-    * survivors, commit a near-empty day, and the next sweep's
-    * retention would make the data's disappearance permanent. An
-    * explicit error turns that silent loss into an operational
-    * signal: size `keepDays` to cover the replay horizon. */
-  private def requireNotCompacted(spark: SparkSession, root: String,
-      day: String): Unit = {
-    val (_, replaced) = markerState(fs(spark, root), root)
-    if (replaced.contains(day)) throw new IllegalStateException(
-      s"day '$day' of store '$root' was already folded into a compacted " +
-        "partition; re-ingesting it cannot exclude its own prior rows and " +
-        "would self-suppress to zero survivors. Re-ingest is only supported " +
-        "inside compact()'s keepDays retention window — size keepDays to " +
-        "cover the longest replay horizon.")
-  }
-
-  /** The `dt=` partition names present under one table dir — ONE
-    * directory listing, not per-day exists() round-trips (a year-old
-    * store on object storage would pay ~365 sequential RPCs each). */
-  private def dtNames(f: org.apache.hadoop.fs.FileSystem, root: String,
-      table: String): Set[String] = {
-    val dir = new Path(s"$root/$table")
-    if (!f.exists(dir)) Set.empty
-    else f.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("dt=")).map(_.stripPrefix("dt=")).toSet
-  }
+  def knownDays(spark: SparkSession, root: String): Seq[String] =
+    dayStore.knownDays(spark, root)
 
   /** Whether an OPTIONAL acceleration table (`postings` for
     * [[noveltyReport]], `df` for [[ingestContained]]'s guard,
@@ -148,8 +105,8 @@ object DedupStore {
       base: String = "sets"): Boolean = {
     val f = fs(spark, root)
     val days = committedDays(spark, root).filterNot(exceptDay.contains)
-    val accelDays = dtNames(f, root, table)
-    val baseDays = dtNames(f, root, base)
+    val accelDays = dayStore.dtNames(f, root, table).toSet
+    val baseDays = dayStore.dtNames(f, root, base).toSet
     days.forall(dd => accelDays.contains(dd) || !baseDays.contains(dd))
   }
 
@@ -176,7 +133,7 @@ object DedupStore {
       root: String): Option[String] = {
     val f = fs(spark, root)
     val p = new Path(root, CosEpochMarker)
-    if (!f.exists(p)) None else readMarker(f, p).headOption
+    if (!f.exists(p)) None else MarkerProtocol.readMarker(f, p).headOption
   }
 
   private def parseCosEpoch(ep: String): Option[(Int, Int)] =
@@ -238,9 +195,8 @@ object DedupStore {
       maxBucket: Int = LshGuard.DefaultMaxBucket,
       spillDir: Option[String] = None,
       retainCache: Boolean = false): DataFrame = {
-    requireDay(day)
     val spark = delta.sparkSession
-    requireNotCompacted(spark, root, day)
+    dayStore.requireWritable(spark, root, day)
     val emptyDelta = delta.limit(0)
     val storeBands = readCommitted(spark, root, "bands",
       IncrementalNearDedup.bandTable(emptyDelta, idCol, textCol),
@@ -307,9 +263,8 @@ object DedupStore {
       idCol: String = "doc_id", textCol: String = "text",
       t: Double = IncrementalContainment.DefaultT,
       retainCache: Boolean = false): DataFrame = {
-    requireDay(day)
     val spark = delta.sparkSession
-    requireNotCompacted(spark, root, day)
+    dayStore.requireWritable(spark, root, day)
     val emptyDelta = delta.limit(0)
     val emptySets = IncrementalNearDedup.shingleSets(emptyDelta, idCol, textCol)
     val storeSets = readCommitted(spark, root, "sets",
@@ -365,9 +320,8 @@ object DedupStore {
   def ingestExact(delta: DataFrame, root: String, day: String,
       idCol: String = "doc_id", textCol: String = "text",
       retainCache: Boolean = false): DataFrame = {
-    requireDay(day)
     val spark = delta.sparkSession
-    requireNotCompacted(spark, root, day)
+    dayStore.requireWritable(spark, root, day)
     val fp = "__graft_fp"
     val store = readCommitted(spark, root, "digests",
       delta.limit(0).select(md5(col(textCol)).as("fp")),
@@ -416,9 +370,8 @@ object DedupStore {
       retainCache: Boolean = false,
       decoder: Option[graft.ops.PayloadDecoder] = None): DataFrame = {
     import graft.queries.MultimodalQueries.sigBands
-    requireDay(day)
     val spark = delta.sparkSession
-    requireNotCompacted(spark, root, day)
+    dayStore.requireWritable(spark, root, day)
     graft.GraftExtensions.ensureRegistered(spark)
     require(maxHamming <= graft.queries.MultimodalQueries.PhashMaxHamming,
       s"banding is pigeonhole-exact only to hamming ${
@@ -558,9 +511,8 @@ object DedupStore {
       idCol: String = "vec_id", embCol: String = "embedding",
       minCos: Double = 0.9, retainCache: Boolean = false): DataFrame = {
     import graft.functions.Vectors
-    requireDay(day)
     val spark = delta.sparkSession
-    requireNotCompacted(spark, root, day)
+    dayStore.requireWritable(spark, root, day)
     graft.GraftExtensions.ensureRegistered(spark)
     require(minCos > 0.0 && minCos <= 1.0,
       s"minCos must be in (0, 1] (SRP plane agreement degrades toward " +
@@ -691,7 +643,7 @@ object DedupStore {
     val epoch = cosEpoch(spark)
     val days = committedDays(spark, root)
     val vecDays = days.filter(dd =>
-      partFiles(f, new Path(s"$root/vecs/dt=$dd")).nonEmpty)
+      dayStore.partFiles(f, new Path(s"$root/vecs/dt=$dd")).nonEmpty)
     if (vecDays.isEmpty) return CosBandReport("noop-empty-store", 0, epoch)
     if (!force && cosEpochOnDisk(spark, root).contains(epoch) &&
         accelComplete(spark, root, "cos_bands", None, base = "vecs"))
@@ -702,7 +654,7 @@ object DedupStore {
     f.delete(new Path(root, CosEpochMarker), false)
     // stale partitions of days whose vecs vanished (a compaction fold
     // between epochs) would otherwise shadow the rebuild's coverage
-    dtNames(f, root, "cos_bands").filterNot(vecDays.toSet)
+    dayStore.dtNames(f, root, "cos_bands").filterNot(vecDays.toSet)
       .foreach(dd => f.delete(new Path(s"$root/cos_bands/dt=$dd"), true))
     vecDays.foreach { dd =>
       val out = new Path(s"$root/cos_bands/dt=$dd")
@@ -793,33 +745,13 @@ object DedupStore {
       .withColumnRenamed("id", idCol)
   }
 
-  // restricted to chars that partition-dir encoding leaves verbatim:
-  // the stale-partition delete below addresses `dt=$day` literally,
-  // and an escaped value (e.g. a space → %20) would silently miss it
-  // (base character discipline shared via MarkerProtocol)
-  private def requireDay(day: String): Unit = {
-    MarkerProtocol.requireDayName(day)
-    require(!day.startsWith(MergedPrefix),
-      s"'$MergedPrefix' is reserved for compaction markers, got '$day'")
-  }
-
   case class CompactionReport(mergedDay: Option[String], daysMerged: Int,
       filesBefore: Int, filesAfter: Int)
 
-  private def partFiles(f: org.apache.hadoop.fs.FileSystem, dir: Path): Seq[org.apache.hadoop.fs.FileStatus] =
-    if (!f.exists(dir)) Nil
-    else f.listStatus(dir).toSeq.filterNot(_.getPath.getName.startsWith("_"))
-      .filterNot(_.getPath.getName.startsWith("."))
-
   /** Total data files across every table's committed day partitions —
     * the number [[compact]] bounds (the spec's assertion target). */
-  def committedFileCount(spark: SparkSession, root: String): Int = {
-    val f = fs(spark, root)
-    val days = committedDays(spark, root)
-    storeTables(f, root).map { t =>
-      days.map(dd => partFiles(f, new Path(s"$root/$t/dt=$dd")).size).sum
-    }.sum
-  }
+  def committedFileCount(spark: SparkSession, root: String): Int =
+    dayStore.committedFileCount(spark, root)
 
   private def storeTables(f: org.apache.hadoop.fs.FileSystem,
       root: String): Seq[String] = {
@@ -827,7 +759,7 @@ object DedupStore {
     if (!f.exists(r)) Nil
     else f.listStatus(r).toSeq.filter(_.isDirectory)
       .map(_.getPath.getName)
-      .filterNot(n => n == MarkerDir || n.startsWith(".") || n.startsWith("_"))
+      .filterNot(n => n.startsWith(".") || n.startsWith("_"))
   }
 
   /** COMPACTION + retention: merge all committed days OLDER than the
@@ -854,54 +786,27 @@ object DedupStore {
     *     rename that commits the copy un-commits the originals.
     *     A crash before it changes nothing; a crash after it leaves
     *     the originals as invisible garbage;
-    *  3. the garbage sweep (old markers + partitions) runs last and
-    *     also at the START of every compact call, so a crash between
-    *     2 and 3 is healed by the next run.
+    *  3. the garbage sweep (old markers + partitions) runs at the
+    *     START of the NEXT compact call — the reader grace period —
+    *     so a crash between 2 and 3 changes nothing either.
     * Re-running after any crash converges: the merged-day name is a
     * deterministic digest of the replaced-day list. */
   def compact(spark: SparkSession, root: String, keepDays: Int = 7,
       targetFileBytes: Long = 128L * 1024 * 1024): CompactionReport = {
-    require(keepDays >= 0, "keepDays must be >= 0")
-    val f = fs(spark, root)
-    sweepReplaced(f, root) // heal a prior crash between commit and sweep
+    // retention and the merged tier are the kernel's plan: real days
+    // only (a merged-* pseudo-day counted inside the keepDays tail
+    // would push the CURRENT day into a fold, and its crash-retry
+    // re-ingest could no longer exclude its own rows), tiered by
+    // graft.store.maxMergedParts
+    val plan = dayStore.planCompaction(spark, root, keepDays)
     val before = committedFileCount(spark, root)
-    val all = committedDays(spark, root)
-    // retention counts REAL days only: merged-* pseudo-days sort after
-    // date-named days ('m' > digits), so counting them inside the
-    // keepDays tail would shrink the protected window by one real day
-    // per compaction — eventually folding the CURRENT day, whose
-    // crash-retry re-ingest could then no longer exclude its own rows
-    // and would self-suppress to zero.
-    val (alreadyMerged, realDays) = all.partition(_.startsWith(MergedPrefix))
-    val newOld = realDays.dropRight(keepDays)
-    // TIERED re-merge (round 11): the round-10 policy folded every
-    // prior merged partition into every compaction, so each
-    // maintenance run re-read and re-wrote the ENTIRE historical tail
-    // — O(archive) churn for an O(new-old-days) change, the exact
-    // cost curve the store's append-only layout exists to avoid. Now
-    // a run folds only the newly-aged real days into a FRESH merged
-    // partition, letting merged partitions accumulate up to
-    // `graft.store.maxMergedParts` (default 4); only when one more
-    // would exceed the bound does a run fold the merged tier too.
-    // Amortized archive churn drops from O(archive)/run to
-    // O(archive/maxMergedParts)/run, while reader-side day listing
-    // stays bounded.
-    val maxMergedParts = spark.conf.getOption("graft.store.maxMergedParts")
-      .map(_.toInt).getOrElse(4)
-    require(maxMergedParts >= 1, "graft.store.maxMergedParts must be >= 1")
-    val mergeDays =
-      if (alreadyMerged.size + 1 > maxMergedParts) alreadyMerged ++ newOld
-      else newOld
-    if (mergeDays.size < 2 || newOld.isEmpty)
-      return CompactionReport(None, 0, before, before)
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(mergeDays.mkString(",").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val mergedDay = s"$MergedPrefix${mergeDays.size}d-$digest"
+    val merge = plan.getOrElse(return CompactionReport(None, 0, before, before))
+    val (mergedDay, mergeDays) = (merge.day, merge.days)
+    val f = fs(spark, root)
     val tables = storeTables(f, root)
     tables.foreach { t =>
       val dayDirs = mergeDays.map(dd => new Path(s"$root/$t/dt=$dd"))
-        .filter(dd => partFiles(f, dd).nonEmpty)
+        .filter(dd => dayStore.partFiles(f, dd).nonEmpty)
       val outDir = new Path(s"$root/$t/dt=$mergedDay")
       f.delete(outDir, true) // debris from a crashed prior attempt
       // the `postings` table is an OPTIONAL acceleration whose reader
@@ -914,8 +819,8 @@ object DedupStore {
       // the merged postings partition in that case (sets merged +
       // postings absent → the reader falls back, correctly).
       val skipIncompletePostings = t == "postings" && !mergeDays.forall { dd =>
-        partFiles(f, new Path(s"$root/postings/dt=$dd")).nonEmpty ||
-          partFiles(f, new Path(s"$root/sets/dt=$dd")).isEmpty
+        dayStore.partFiles(f, new Path(s"$root/postings/dt=$dd")).nonEmpty ||
+          dayStore.partFiles(f, new Path(s"$root/sets/dt=$dd")).isEmpty
       }
       def target(bytes: Long): Int = math.max(1L,
         math.ceil(bytes.toDouble / targetFileBytes).toLong).toInt
@@ -930,15 +835,15 @@ object DedupStore {
         // `postings`, which must be SKIPPED on a mixed merge: its
         // reader trusts any present partition).
         val setDirs = mergeDays.map(dd => new Path(s"$root/sets/dt=$dd"))
-          .filter(dd => partFiles(f, dd).nonEmpty)
+          .filter(dd => dayStore.partFiles(f, dd).nonEmpty)
         // size the merged df from the DF side (its own day partitions
         // when present, a sets/8 estimate when healing pre-feature
         // days) — sizing from the sets bytes would over-shard the far
         // smaller aggregate, re-growing the small-file count this
         // pass exists to bound
-        val dfBytes = dayDirs.flatMap(partFiles(f, _)).map(_.getLen).sum
+        val dfBytes = dayDirs.flatMap(dayStore.partFiles(f, _)).map(_.getLen).sum
         val estBytes = if (dfBytes > 0) dfBytes
-          else setDirs.flatMap(partFiles(f, _)).map(_.getLen).sum / 8
+          else setDirs.flatMap(dayStore.partFiles(f, _)).map(_.getLen).sum / 8
         if (setDirs.nonEmpty)
           spark.read.parquet(setDirs.map(_.toString): _*)
             .select(explode(col("hset")).as("sh"))
@@ -956,10 +861,10 @@ object DedupStore {
           case (srpTables, srpBits) =>
             graft.GraftExtensions.ensureRegistered(spark)
             val vecDirs = mergeDays.map(dd => new Path(s"$root/vecs/dt=$dd"))
-              .filter(dd => partFiles(f, dd).nonEmpty)
-            val bBytes = dayDirs.flatMap(partFiles(f, _)).map(_.getLen).sum
+              .filter(dd => dayStore.partFiles(f, dd).nonEmpty)
+            val bBytes = dayDirs.flatMap(dayStore.partFiles(f, _)).map(_.getLen).sum
             val estBytes = if (bBytes > 0) bBytes
-              else vecDirs.flatMap(partFiles(f, _)).map(_.getLen).sum / 4
+              else vecDirs.flatMap(dayStore.partFiles(f, _)).map(_.getLen).sum / 4
             if (vecDirs.nonEmpty)
               cosBandsOf(spark.read.parquet(vecDirs.map(_.toString): _*),
                   srpTables, srpBits)
@@ -968,34 +873,14 @@ object DedupStore {
         }
       } else if (dayDirs.nonEmpty && !skipIncompletePostings) {
         spark.read.parquet(dayDirs.map(_.toString): _*)
-          .coalesce(target(dayDirs.flatMap(partFiles(f, _)).map(_.getLen).sum))
+          .coalesce(target(dayDirs.flatMap(dayStore.partFiles(f, _)).map(_.getLen).sum))
           .write.parquet(outDir.toString)
       }
     }
-    // the atomic swap: marker content = the replaced names
-    // TRANSITIVELY — a folded merged-* partition contributes its own
-    // name (so the sweep can GC it) PLUS every day its marker listed.
-    // Without the closure, the sweep's later deletion of the inner
-    // merged marker would erase its days from the replaced set, and
-    // [[requireNotCompacted]]/[[knownDays]] would silently stop
-    // protecting days folded two generations back — a backfill
-    // re-ingest of such a day would self-suppress, the exact silent
-    // loss the round-11 guard exists to make loud. (Inner marker
-    // contents are already closures, so one level of expansion is
-    // the full closure.)
-    val content = mergeDays.flatMap { dd =>
-      if (dd.startsWith(MergedPrefix))
-        dd +: readMarker(f, new Path(s"$root/$MarkerDir", dd))
-      else Seq(dd)
-    }.distinct
-    val marker = new Path(s"$root/$MarkerDir", mergedDay)
-    val tmp = new Path(s"$root/$MarkerDir", s".$mergedDay.tmp")
-    f.mkdirs(new Path(root, MarkerDir))
-    val out = f.create(tmp, true)
-    try out.write((content.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    fc(spark, root).rename(f.makeQualified(tmp), f.makeQualified(marker),
-      Options.Rename.OVERWRITE)
+    // the atomic swap: the marker's content lists the replaced names
+    // transitively, so [[DayStore.requireWritable]]/[[knownDays]] keep
+    // protecting days folded two generations back
+    dayStore.commitMerge(spark, root, merge)
     // DELIBERATELY no sweep here: the replaced days' files are
     // invisible garbage to every NEW reader, but a query that built
     // its plan just before the marker landed may still be scanning
@@ -1008,18 +893,6 @@ object DedupStore {
       committedFileCount(spark, root))
   }
 
-  /** One integrity finding from [[fsck]]. Severities:
-    *  - `error` — a reader-visible invariant is broken (rows double-
-    *    count, or an acceleration table disagrees with the data it
-    *    summarizes): fix before trusting query results;
-    *  - `warn` — invisible to readers but operationally actionable
-    *    (crash debris that a re-ingest or the next [[compact]] should
-    *    resolve, a day name the delete paths cannot address);
-    *  - `info` — expected transient states of the protocol itself
-    *    (replaced days inside the sweep grace period). */
-  case class FsckFinding(severity: String, check: String,
-      subject: String, detail: String)
-
   /** STORE INTEGRITY AUDIT — the operational `fsck` for a store root,
     * report-only (nothing heals here; [[compact]] owns GC, re-ingest
     * owns repair). The marker protocol is crash-safe only while its
@@ -1028,27 +901,10 @@ object DedupStore {
     * silently double-count. This walks them:
     *
     * Shallow (default) — pure metadata, O(days) listings + marker
-    * reads, safe at any cadence:
-    *  - `tmp-marker` (warn): a `.DAY.tmp` file under `_committed` — a
-    *    commit crashed between create and rename; the day never
-    *    published.
-    *  - `empty-merged-marker` (error): a live `merged-*` marker whose
-    *    content lists nothing — it commits a partition that replaces
-    *    no days (manual tampering; [[compact]] never writes one).
-    *  - `double-merged` (error): a real day claimed by TWO live
-    *    `merged-*` markers — both merged partitions hold its rows and
-    *    the committed view double-counts them. The one invariant no
-    *    reader-side filter can mask.
-    *  - `orphan-partition` (warn): a `dt=DAY` partition no marker has
-    *    ever named — a crash between table write and marker publish.
-    *    Invisible to readers; re-ingest the day (idempotent) or
-    *    delete.
-    *  - `merged-debris` / `awaiting-sweep` (info): uncommitted
-    *    `merged-*` partitions and replaced days inside the sweep
-    *    grace period — the protocol's normal transients.
-    *  - `invalid-day-name` (warn): a marker [[requireDay]] would
-    *    reject — the literal `dt=$day` delete paths cannot address
-    *    its partitions.
+    * reads, safe at any cadence: the kernel's marker and partition
+    * checks ([[DayStore.fsckShallow]] — `tmp-marker`,
+    * `empty-merged-marker`, `double-merged`, `invalid-day-name`,
+    * `orphan-partition`, `merged-debris`, `awaiting-sweep`) plus:
     *  - `accel-without-sets` (warn): an acceleration partition (`df`,
     *    `postings`) for a committed day with no `sets` partition —
     *    counts claiming survivors that do not exist; the df guard
@@ -1096,79 +952,19 @@ object DedupStore {
       deep: Boolean = false, force: Boolean = false): Seq[FsckFinding] = {
     val f = fs(spark, root)
     val out = scala.collection.mutable.ArrayBuffer.empty[FsckFinding]
-    val markerDir = new Path(root, MarkerDir)
-    val (names, replaced) = markerState(f, root)
-    val live = names.filterNot(replaced).toSet
+    out ++= dayStore.fsckShallow(f, root)
     val tables = storeTables(f, root)
     val committed = committedDays(spark, root)
-
-    // crashed-commit temp markers (create succeeded, rename did not)
-    if (f.exists(markerDir))
-      f.listStatus(markerDir).toSeq.map(_.getPath.getName)
-        .filter(n => n.startsWith(".") && n.endsWith(".tmp"))
-        .foreach(n => out += FsckFinding("warn", "tmp-marker", n,
-          "crashed commit left a temp marker; the day never published — " +
-            "re-ingest it (idempotent) or delete the file"))
-
-    // live merged-marker content invariants
-    val liveMerged = names.filter(n => n.startsWith(MergedPrefix) && live(n))
-    val contents = liveMerged
-      .map(m => m -> readMarker(f, new Path(markerDir, m))).toMap
-    contents.foreach { case (m, c) =>
-      if (c.isEmpty) out += FsckFinding("error", "empty-merged-marker", m,
-        "committed compaction marker replaces no days — compact() never " +
-          "writes one; remove it and audit how it appeared")
-    }
-    contents.toSeq
-      .flatMap { case (m, c) =>
-        c.filterNot(_.startsWith(MergedPrefix)).map(_ -> m) }
-      .groupBy(_._1).filter(_._2.size > 1)
-      .foreach { case (d, ms) =>
-        out += FsckFinding("error", "double-merged", d,
-          s"day claimed by ${ms.size} live compaction markers " +
-            s"(${ms.map(_._2).sorted.mkString(", ")}) — its rows are " +
-            "duplicated across merged partitions and the committed view " +
-            "double-counts them") }
-
-    // marker names the delete paths cannot address
-    names.filterNot(_.startsWith(MergedPrefix))
-      .filterNot(n => scala.util.Try(requireDay(n)).isSuccess)
-      .foreach(n => out += FsckFinding("warn", "invalid-day-name", n,
-        "marker name outside [A-Za-z0-9._-]+ — partition-dir encoding " +
-          "diverges from the literal dt=DAY paths the store deletes by"))
-
-    // per-table partition scans against the marker namespace
-    val everNamed = names.toSet ++ replaced
-    tables.foreach { t =>
-      dtNames(f, root, t).toSeq.sorted.foreach { d =>
-        if (!everNamed.contains(d)) {
-          if (d.startsWith(MergedPrefix))
-            out += FsckFinding("info", "merged-debris", s"$t/dt=$d",
-              "uncommitted merged partition (crashed compact); the next " +
-                "compact() sweeps it")
-          else
-            out += FsckFinding("warn", "orphan-partition", s"$t/dt=$d",
-              "partition with no marker (crash between table write and " +
-                "publish): invisible to readers — re-ingest the day or " +
-                "delete the directory")
-        } else if (replaced.contains(d))
-          out += FsckFinding("info", "awaiting-sweep", s"$t/dt=$d",
-            "replaced by a committed compaction; swept at the next " +
-              "compact() after the reader grace period")
-      }
-    }
-    names.filter(replaced.contains).foreach(n =>
-      out += FsckFinding("info", "awaiting-sweep", s"$MarkerDir/$n",
-        "replaced day's marker inside the sweep grace period"))
+    val live = committed.toSet
 
     // acceleration partitions claiming survivors that do not exist
     if (tables.contains("sets")) {
-      val setDays = dtNames(f, root, "sets")
-        .filter(d => partFiles(f, new Path(s"$root/sets/dt=$d")).nonEmpty)
+      val setDays = dayStore.dtNames(f, root, "sets")
+        .filter(d => dayStore.partFiles(f, new Path(s"$root/sets/dt=$d")).nonEmpty)
       Seq("df", "postings").filter(tables.contains).foreach { t =>
-        dtNames(f, root, t)
+        dayStore.dtNames(f, root, t)
           .filter(d => live(d) &&
-            partFiles(f, new Path(s"$root/$t/dt=$d")).nonEmpty)
+            dayStore.partFiles(f, new Path(s"$root/$t/dt=$d")).nonEmpty)
           .filterNot(setDays.contains).toSeq.sorted
           .foreach(d => out += FsckFinding("warn", "accel-without-sets",
             s"$t/dt=$d",
@@ -1180,11 +976,11 @@ object DedupStore {
     // with no stored vectors claims signatures of rows that do not
     // exist — the fast path would band against phantom archive ids
     if (tables.contains("vecs")) {
-      val vecDays = dtNames(f, root, "vecs")
-        .filter(d => partFiles(f, new Path(s"$root/vecs/dt=$d")).nonEmpty)
-      dtNames(f, root, "cos_bands")
+      val vecDays = dayStore.dtNames(f, root, "vecs")
+        .filter(d => dayStore.partFiles(f, new Path(s"$root/vecs/dt=$d")).nonEmpty)
+      dayStore.dtNames(f, root, "cos_bands")
         .filter(d => live(d) &&
-          partFiles(f, new Path(s"$root/cos_bands/dt=$d")).nonEmpty)
+          dayStore.partFiles(f, new Path(s"$root/cos_bands/dt=$d")).nonEmpty)
         .filterNot(vecDays.contains).toSeq.sorted
         .foreach(d => out += FsckFinding("warn", "accel-without-vecs",
           s"cos_bands/dt=$d",
@@ -1192,10 +988,8 @@ object DedupStore {
             "vectors — its signatures cover rows that do not exist"))
     }
 
-    if (deep) out ++= fsckDeep(spark, root, f, tables, committed, force)
-
-    val rank = Map("error" -> 0, "warn" -> 1, "info" -> 2)
-    out.sortBy(fi => (rank(fi.severity), fi.check, fi.subject)).toSeq
+    if (deep) fsckDeep(spark, root, f, tables, committed, force, out)
+    FsckFinding.sorted(out.toSeq)
   }
 
   /** The data-reading half of [[fsck]]: identity uniqueness across
@@ -1206,10 +1000,8 @@ object DedupStore {
     * data files. */
   private def fsckDeep(spark: SparkSession, root: String,
       f: org.apache.hadoop.fs.FileSystem, tables: Seq[String],
-      committed: Seq[String], force: Boolean): Seq[FsckFinding] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[FsckFinding]
-    if (committed.isEmpty) return Nil
-    val auditDir = new Path(root, "_audit")
+      committed: Seq[String], force: Boolean,
+      out: scala.collection.mutable.ArrayBuffer[FsckFinding]): Unit = {
     // accel COMPLETENESS rides every day fingerprint (round 17,
     // advice — the IvfStore geom-digest pattern): the df/postings/
     // cos-bands recounts below are SKIPPED while their table is
@@ -1220,273 +1012,201 @@ object DedupStore {
     // day, a conf re-stamp) every watermark moves and the previously
     // unauditable days re-enter the recount — the first-audit
     // induction stays sound.
-    val accelState = (Seq("df" -> "sets", "postings" -> "sets",
+    lazy val accelState = (Seq("df" -> "sets", "postings" -> "sets",
         "cos_bands" -> "vecs")
       .filter { case (t, b) => tables.contains(t) && tables.contains(b) }
       .map { case (t, b) =>
         s"$t=${accelComplete(spark, root, t, None, base = b)}" } :+
       s"epoch=${cosEpochOnDisk(spark, root).getOrElse("")}").mkString(",")
-    def dayFp(d: String): String = {
-      val body = tables.flatMap { t =>
-        partFiles(f, new Path(s"$root/$t/dt=$d"))
-          .map(st => s"$t/${st.getPath.getName}:${st.getLen}")
-      }.sorted.mkString("\n") + s"\n#$accelState"
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(body.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    }
-    val fps = committed.map(d => d -> dayFp(d)).toMap
-    val watermarks: Map[String, String] =
-      if (!f.exists(auditDir)) Map.empty
-      else f.listStatus(auditDir).toSeq.map(_.getPath)
-        .filterNot(_.getName.startsWith("."))
-        .map(p => p.getName ->
-          readMarker(f, p).headOption.getOrElse("")).toMap
-    // housekeeping: a watermark whose day left the committed set is
-    // meaningless — drop it so a later same-named day re-audits
-    watermarks.keys.filterNot(committed.contains)
-      .foreach(d => f.delete(new Path(auditDir, d), false))
-    val toRecount =
-      if (force) committed
-      else committed.filter(d => !watermarks.get(d).contains(fps(d)))
-    if (toRecount.isEmpty) return Nil
-    val dirtyDays = scala.collection.mutable.Set.empty[String]
+    dayStore.audit(spark, root, committed, force)(d =>
+        dayStore.filesFingerprint(f, root, d, s"\n#$accelState")) { toRecount =>
+      val dirtyDays = scala.collection.mutable.Set.empty[String]
 
-    // committed view of one table over an explicit day list, with the
-    // day carried as a literal column (per-day reads — no
-    // partition-type inference, the fsckDeep rule, and the finding's
-    // day attribution needs the origin day anyway)
-    def readDaysCols(t: String, days: Seq[String],
-        cols: Seq[String]): Option[DataFrame] = {
-      val dirs = days.map(d => d -> new Path(s"$root/$t/dt=$d"))
-        .filter { case (_, dd) => partFiles(f, dd).nonEmpty }
-      if (dirs.isEmpty) None
-      else Some(dirs.map { case (d, dd) =>
-        spark.read.parquet(dd.toString)
-          .select(cols.map(col): _*).withColumn("__dt", lit(d))
-      }.reduce(_ unionByName _))
-    }
-
-    // severity split (round 12): only the EXACT store suppresses BY
-    // KEY (digests.fp is the identity the ingest anti-joins on), so a
-    // duplicate fp is impossible under healthy operation — error. The
-    // near/phash/cos disciplines suppress by SIMILARITY: a re-ingested
-    // doc_id/vec_id whose content drifted past the Jaccard/hamming/
-    // cosine threshold legitimately commits the same key on two days,
-    // so a duplicate there is suspicious (most corpora assign stable
-    // ids to stable content) but not proof of tampering — warn.
-    //
-    // Day scope: only keys PRESENT in a recounted day are re-checked
-    // (archive semi-joined on the slim key column); every day holding
-    // a flagged key — recounted or not — is dirtied, so a cross-day
-    // dup's unchanged partner re-audits next time too.
-    def dupCheck(table: String, key: String, severity: String,
-        clause: String): Unit =
-      if (tables.contains(table))
-        (readDaysCols(table, committed, Seq(key)),
-            readDaysCols(table, toRecount, Seq(key))) match {
-          case (Some(all), Some(changed)) =>
-            val dupKeys = all
-              .join(changed.select(col(key)).distinct(), Seq(key), "left_semi")
-              .groupBy(col(key)).count().filter(col("count") > 1)
-              .select(col(key)).persist()
-            try {
-              val dups = dupKeys.count()
-              if (dups > 0) {
-                out += FsckFinding(severity, "dup-identity",
-                  s"$table.$key",
-                  s"$dups keys committed more than once across the committed " +
-                    s"view — $clause")
-                all.join(dupKeys, Seq(key), "left_semi")
-                  .select(col("__dt")).distinct()
-                  .collect().foreach(r => dirtyDays += r.getString(0))
-              }
-            } finally { dupKeys.unpersist(); () }
-          case _ => ()
-        }
-    dupCheck("digests", "fp", "error",
-      "exact ingest suppresses by this key, so this is impossible under " +
-        "healthy operation; suspect restored or hand-copied partitions")
-    val simClause = "suppression here is similarity-based, not key-based: " +
-      "a re-ingested id whose content drifted past the threshold " +
-      "legitimately commits twice, but on a stable-id corpus suspect " +
-      "restored or hand-copied partitions"
-    dupCheck("sets", "id", "warn", simClause)
-    dupCheck("sigs", "doc_id", "warn", simClause)
-    dupCheck("vecs", "vec_id", "warn", simClause)
-
-    // the shingles whose cross-day answers a recounted day can move:
-    // everything in its sets (explode) plus everything its own accel
-    // partitions claim — the semi-join key set for both recounts
-    def changedShingles(accelTable: String): Option[DataFrame] = {
-      val fromSets = readDaysCols("sets", toRecount, Seq("hset"))
-        .map(_.select(explode(col("hset")).as("sh")))
-      val fromAccel = readDaysCols(accelTable, toRecount, Seq("sh"))
-        .map(_.select(col("sh")))
-      (fromSets.toSeq ++ fromAccel.toSeq)
-        .reduceOption(_ unionByName _).map(_.distinct())
-    }
-
-    if (tables.contains("df") && tables.contains("sets") &&
-        accelComplete(spark, root, "df", None))
-      (readDaysCols("sets", committed, Seq("hset")),
-          readDaysCols("df", committed, Seq("sh", "cnt")),
-          changedShingles("df")) match {
-        case (Some(sets), Some(dfT), Some(chg0)) =>
-          val chg = chg0.persist()
-          try {
-            val expect = sets.select(explode(col("hset")).as("sh"))
-              .join(chg, Seq("sh"), "left_semi")
-              .groupBy(col("sh")).agg(count(lit(1)).as("e"))
-            val got = dfT.join(chg, Seq("sh"), "left_semi")
-              .groupBy(col("sh")).agg(sum(col("cnt")).as("g"))
-            val bad = expect.join(got, Seq("sh"), "full_outer")
-              .filter(coalesce(col("e"), lit(0L)) =!=
-                coalesce(col("g"), lit(0L))).count()
-            if (bad > 0) {
-              out += FsckFinding("error", "df-mismatch", "df",
-                s"$bad shingles whose committed df count disagrees with a " +
-                  "recount from the committed sets — the containment guard " +
-                  "reads wrong occupancy; delete the df partitions (readers " +
-                  "fall back) and let compact() rebuild them")
-              dirtyDays ++= toRecount // coarse: repair moves fingerprints
-            }
-          } finally { chg.unpersist(); () }
-        case _ => ()
+      // committed view of one table over an explicit day list, with the
+      // day carried as a literal column (per-day reads — no
+      // partition-type inference, the fsckDeep rule, and the finding's
+      // day attribution needs the origin day anyway)
+      def readDaysCols(t: String, days: Seq[String],
+          cols: Seq[String]): Option[DataFrame] = {
+        val dirs = days.map(d => d -> new Path(s"$root/$t/dt=$d"))
+          .filter { case (_, dd) => dayStore.partFiles(f, dd).nonEmpty }
+        if (dirs.isEmpty) None
+        else Some(dirs.map { case (d, dd) =>
+          spark.read.parquet(dd.toString)
+            .select(cols.map(col): _*).withColumn("__dt", lit(d))
+        }.reduce(_ unionByName _))
       }
 
-    if (tables.contains("postings") && tables.contains("sets") &&
-        accelComplete(spark, root, "postings", None))
-      (readDaysCols("sets", committed, Seq("hset")),
-          readDaysCols("postings", committed, Seq("sh")),
-          changedShingles("postings")) match {
-        case (Some(sets), Some(post), Some(chg0)) =>
-          val chg = chg0.persist()
-          try {
-            val expect = sets.select(explode(col("hset")).as("sh"))
-              .join(chg, Seq("sh"), "left_semi").distinct()
-            val got = post.select(col("sh"))
-              .join(chg, Seq("sh"), "left_semi").distinct()
-            val missing = expect.join(got, Seq("sh"), "left_anti").count()
-            val extra = got.join(expect, Seq("sh"), "left_anti").count()
-            if (missing + extra > 0) {
-              out += FsckFinding("error", "postings-mismatch", "postings",
-                s"$missing shingles missing / $extra extra vs the committed " +
-                  "sets — noveltyReport's fast path mis-scores; delete the " +
-                  "postings partitions (readers fall back) and let " +
-                  "compact() rebuild coverage")
-              dirtyDays ++= toRecount
-            }
-          } finally { chg.unpersist(); () }
-        case _ => ()
-      }
-
-    // cos_bands recount (round 17): the cosine store's persisted
-    // signatures are a PER-DAY derivation of that day's vecs at the
-    // marker's epoch — no cross-day fold, so the recount scopes to
-    // the changed days directly: re-derive srp_sig from the stored
-    // embeddings and compare row multisets. A mismatch means
-    // ingestCosine's fast path bands against wrong signatures —
-    // wrong candidates, silently lost recall.
-    if (tables.contains("cos_bands") && tables.contains("vecs") &&
-        accelComplete(spark, root, "cos_bands", None, base = "vecs"))
-      cosEpochOnDisk(spark, root).flatMap(parseCosEpoch).foreach {
-        case (srpTables, srpBits) =>
-          (readDaysCols("vecs", toRecount, Seq("vec_id", "embedding")),
-              readDaysCols("cos_bands", toRecount,
-                Seq("vec_id", "band", "bv"))) match {
-            case (Some(v), Some(b)) =>
-              graft.GraftExtensions.ensureRegistered(spark)
-              val keys = Seq("vec_id", "band", "bv", "__dt")
-              val expect = v.select(col("vec_id"), posexplode(expr(
-                  s"srp_sig(embedding, 'cos', $srpTables, $srpBits)")),
-                  col("__dt"))
-                .toDF(keys: _*)
-                .groupBy(keys.map(col): _*).agg(count(lit(1)).as("e"))
-              val got = b.groupBy(keys.map(col): _*)
-                .agg(count(lit(1)).as("g"))
-              val badDays = expect.join(got, keys, "full_outer")
-                .filter(coalesce(col("e"), lit(0L)) =!=
-                  coalesce(col("g"), lit(0L)))
-                .select(col("__dt")).distinct()
-                .collect().map(_.getString(0)).toSeq.sorted
-              if (badDays.nonEmpty) {
-                out += FsckFinding("error", "cos-bands-mismatch",
-                  "cos_bands",
-                  s"days ${badDays.mkString(", ")} hold band rows that " +
-                    "disagree with srp_sig over their committed vecs at " +
-                    "the stamped epoch — ingestCosine's fast path bands " +
-                    "against wrong signatures; run rebuildCosBands(force)")
-                dirtyDays ++= badDays
-              }
-            case (None, Some(_)) => () // bands with no vecs: shallow warns
+      // severity split (round 12): only the EXACT store suppresses BY
+      // KEY (digests.fp is the identity the ingest anti-joins on), so a
+      // duplicate fp is impossible under healthy operation — error. The
+      // near/phash/cos disciplines suppress by SIMILARITY: a re-ingested
+      // doc_id/vec_id whose content drifted past the Jaccard/hamming/
+      // cosine threshold legitimately commits the same key on two days,
+      // so a duplicate there is suspicious (most corpora assign stable
+      // ids to stable content) but not proof of tampering — warn.
+      //
+      // Day scope: only keys PRESENT in a recounted day are re-checked
+      // (archive semi-joined on the slim key column); every day holding
+      // a flagged key — recounted or not — is dirtied, so a cross-day
+      // dup's unchanged partner re-audits next time too.
+      def dupCheck(table: String, key: String, severity: String,
+          clause: String): Unit =
+        if (tables.contains(table))
+          (readDaysCols(table, committed, Seq(key)),
+              readDaysCols(table, toRecount, Seq(key))) match {
+            case (Some(all), Some(changed)) =>
+              val dupKeys = all
+                .join(changed.select(col(key)).distinct(), Seq(key), "left_semi")
+                .groupBy(col(key)).count().filter(col("count") > 1)
+                .select(col(key)).persist()
+              try {
+                val dups = dupKeys.count()
+                if (dups > 0) {
+                  out += FsckFinding(severity, "dup-identity",
+                    s"$table.$key",
+                    s"$dups keys committed more than once across the committed " +
+                      s"view — $clause")
+                  all.join(dupKeys, Seq(key), "left_semi")
+                    .select(col("__dt")).distinct()
+                    .collect().foreach(r => dirtyDays += r.getString(0))
+                }
+              } finally { dupKeys.unpersist(); () }
             case _ => ()
           }
+      dupCheck("digests", "fp", "error",
+        "exact ingest suppresses by this key, so this is impossible under " +
+          "healthy operation; suspect restored or hand-copied partitions")
+      val simClause = "suppression here is similarity-based, not key-based: " +
+        "a re-ingested id whose content drifted past the threshold " +
+        "legitimately commits twice, but on a stable-id corpus suspect " +
+        "restored or hand-copied partitions"
+      dupCheck("sets", "id", "warn", simClause)
+      dupCheck("sigs", "doc_id", "warn", simClause)
+      dupCheck("vecs", "vec_id", "warn", simClause)
+
+      // the shingles whose cross-day answers a recounted day can move:
+      // everything in its sets (explode) plus everything its own accel
+      // partitions claim — the semi-join key set for both recounts
+      def changedShingles(accelTable: String): Option[DataFrame] = {
+        val fromSets = readDaysCols("sets", toRecount, Seq("hset"))
+          .map(_.select(explode(col("hset")).as("sh")))
+        val fromAccel = readDaysCols(accelTable, toRecount, Seq("sh"))
+          .map(_.select(col("sh")))
+        (fromSets.toSeq ++ fromAccel.toSeq)
+          .reduceOption(_ unionByName _).map(_.distinct())
       }
 
-    // dirty days lose their watermark wherever they sit (a cross-day
-    // dup's partner may not have been recounted this audit); clean
-    // recounted days watermark at their audit-time fingerprint
-    dirtyDays.foreach(d => f.delete(new Path(auditDir, d), false))
-    toRecount.filterNot(dirtyDays.contains).foreach(d =>
-      MarkerProtocol.atomicMarker(spark.sparkContext.hadoopConfiguration,
-        auditDir, d, fps(d)))
-    out.toSeq
+      if (tables.contains("df") && tables.contains("sets") &&
+          accelComplete(spark, root, "df", None))
+        (readDaysCols("sets", committed, Seq("hset")),
+            readDaysCols("df", committed, Seq("sh", "cnt")),
+            changedShingles("df")) match {
+          case (Some(sets), Some(dfT), Some(chg0)) =>
+            val chg = chg0.persist()
+            try {
+              val expect = sets.select(explode(col("hset")).as("sh"))
+                .join(chg, Seq("sh"), "left_semi")
+                .groupBy(col("sh")).agg(count(lit(1)).as("e"))
+              val got = dfT.join(chg, Seq("sh"), "left_semi")
+                .groupBy(col("sh")).agg(sum(col("cnt")).as("g"))
+              val bad = expect.join(got, Seq("sh"), "full_outer")
+                .filter(coalesce(col("e"), lit(0L)) =!=
+                  coalesce(col("g"), lit(0L))).count()
+              if (bad > 0) {
+                out += FsckFinding("error", "df-mismatch", "df",
+                  s"$bad shingles whose committed df count disagrees with a " +
+                    "recount from the committed sets — the containment guard " +
+                    "reads wrong occupancy; delete the df partitions (readers " +
+                    "fall back) and let compact() rebuild them")
+                dirtyDays ++= toRecount // coarse: repair moves fingerprints
+              }
+            } finally { chg.unpersist(); () }
+          case _ => ()
+        }
+
+      if (tables.contains("postings") && tables.contains("sets") &&
+          accelComplete(spark, root, "postings", None))
+        (readDaysCols("sets", committed, Seq("hset")),
+            readDaysCols("postings", committed, Seq("sh")),
+            changedShingles("postings")) match {
+          case (Some(sets), Some(post), Some(chg0)) =>
+            val chg = chg0.persist()
+            try {
+              val expect = sets.select(explode(col("hset")).as("sh"))
+                .join(chg, Seq("sh"), "left_semi").distinct()
+              val got = post.select(col("sh"))
+                .join(chg, Seq("sh"), "left_semi").distinct()
+              val missing = expect.join(got, Seq("sh"), "left_anti").count()
+              val extra = got.join(expect, Seq("sh"), "left_anti").count()
+              if (missing + extra > 0) {
+                out += FsckFinding("error", "postings-mismatch", "postings",
+                  s"$missing shingles missing / $extra extra vs the committed " +
+                    "sets — noveltyReport's fast path mis-scores; delete the " +
+                    "postings partitions (readers fall back) and let " +
+                    "compact() rebuild coverage")
+                dirtyDays ++= toRecount
+              }
+            } finally { chg.unpersist(); () }
+          case _ => ()
+        }
+
+      // cos_bands recount (round 17): the cosine store's persisted
+      // signatures are a PER-DAY derivation of that day's vecs at the
+      // marker's epoch — no cross-day fold, so the recount scopes to
+      // the changed days directly: re-derive srp_sig from the stored
+      // embeddings and compare row multisets. A mismatch means
+      // ingestCosine's fast path bands against wrong signatures —
+      // wrong candidates, silently lost recall.
+      if (tables.contains("cos_bands") && tables.contains("vecs") &&
+          accelComplete(spark, root, "cos_bands", None, base = "vecs"))
+        cosEpochOnDisk(spark, root).flatMap(parseCosEpoch).foreach {
+          case (srpTables, srpBits) =>
+            (readDaysCols("vecs", toRecount, Seq("vec_id", "embedding")),
+                readDaysCols("cos_bands", toRecount,
+                  Seq("vec_id", "band", "bv"))) match {
+              case (Some(v), Some(b)) =>
+                graft.GraftExtensions.ensureRegistered(spark)
+                val keys = Seq("vec_id", "band", "bv", "__dt")
+                val expect = v.select(col("vec_id"), posexplode(expr(
+                    s"srp_sig(embedding, 'cos', $srpTables, $srpBits)")),
+                    col("__dt"))
+                  .toDF(keys: _*)
+                  .groupBy(keys.map(col): _*).agg(count(lit(1)).as("e"))
+                val got = b.groupBy(keys.map(col): _*)
+                  .agg(count(lit(1)).as("g"))
+                val badDays = expect.join(got, keys, "full_outer")
+                  .filter(coalesce(col("e"), lit(0L)) =!=
+                    coalesce(col("g"), lit(0L)))
+                  .select(col("__dt")).distinct()
+                  .collect().map(_.getString(0)).toSeq.sorted
+                if (badDays.nonEmpty) {
+                  out += FsckFinding("error", "cos-bands-mismatch",
+                    "cos_bands",
+                    s"days ${badDays.mkString(", ")} hold band rows that " +
+                      "disagree with srp_sig over their committed vecs at " +
+                      "the stamped epoch — ingestCosine's fast path bands " +
+                      "against wrong signatures; run rebuildCosBands(force)")
+                  dirtyDays ++= badDays
+                }
+              case (None, Some(_)) => () // bands with no vecs: shallow warns
+              case _ => ()
+            }
+        }
+
+      dirtyDays
+    }
   }
 
-  /** Delete markers + partitions of days replaced by a COMMITTED
-    * compaction marker, plus `dt=merged-*` partition DEBRIS whose
-    * marker never committed (a crashed compact whose merge set then
-    * changed would otherwise leak that name forever — no marker ever
-    * lists it, so no other path can GC it). Pure garbage collection:
-    * readers already ignore all of it. Idempotent; runs only at the
-    * start of [[compact]] so in-flight readers get a
-    * maintenance-interval grace period (see the no-sweep note
-    * above). */
-  private def sweepReplaced(f: org.apache.hadoop.fs.FileSystem,
-      root: String): Unit = {
-    val (names, replaced) = markerState(f, root)
-    val present = names.toSet
-    val tables = storeTables(f, root)
-    replaced.intersect(present).foreach { dd =>
-      tables.foreach(t => f.delete(new Path(s"$root/$t/dt=$dd"), true))
-      f.delete(new Path(s"$root/$MarkerDir", dd), false)
-    }
-    // uncommitted merged-* partition debris: a crashed compact whose
-    // merge set changed before the retry leaves dirs under a digest
-    // name no marker will ever name again
-    tables.foreach { t =>
-      Option(f.globStatus(new Path(s"$root/$t/dt=$MergedPrefix*")))
-        .getOrElse(Array.empty)
-        .map(_.getPath)
-        .filterNot(p => present.contains(p.getName.stripPrefix("dt=")))
-        .foreach(p => f.delete(p, true))
-    }
-  }
-
-  /** Write each table's `dt=day` partition completely, then publish
-    * the day marker via tmp + atomic OVERWRITE rename (see the object
-    * scaladoc's commit protocol). */
+  /** Write each table's `dt=day` partition under the kernel's day
+    * commit ([[DayStore.commitDay]]: marker retracted, the day's
+    * partitions cleared, written, then the marker re-published). */
   private def commitDay(spark: SparkSession, root: String, day: String,
-      tables: Seq[(String, DataFrame)]): Unit = {
-    // clear the day's prior partitions first: dynamic overwrite
-    // only replaces partitions PRESENT in the incoming frame, so a
-    // backfill whose survivors shrink to zero would otherwise leave
-    // the stale old rows standing
-    val f0 = fs(spark, root)
-    tables.foreach { case (name, _) =>
-      f0.delete(new Path(s"$root/$name/dt=$day"), true)
+      tables: Seq[(String, DataFrame)]): Unit =
+    dayStore.commitDay(spark, root, day, tables.map(_._1)) {
+      tables.foreach { case (name, df) =>
+        PartitionedLayout.overwriteClustered(
+          df.withColumn("dt", lit(day)), s"$root/$name", Seq("dt"))
+      }
     }
-    tables.foreach { case (name, df) =>
-      PartitionedLayout.overwriteClustered(
-        df.withColumn("dt", lit(day)), s"$root/$name", Seq("dt"))
-    }
-    val f = fs(spark, root)
-    val marker = new Path(s"$root/$MarkerDir", day)
-    val tmp = new Path(s"$root/$MarkerDir", s".$day.tmp")
-    f.mkdirs(new Path(root, MarkerDir))
-    val out = f.create(tmp, true)
-    out.close()
-    fc(spark, root).rename(f.makeQualified(tmp), f.makeQualified(marker),
-      Options.Rename.OVERWRITE)
-  }
 }

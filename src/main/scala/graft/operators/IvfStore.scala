@@ -16,7 +16,7 @@ import org.apache.hadoop.fs.Path
   * {{{
   *   _CENTROIDS.txt                    frozen at init ([[IvfIndex.open]] reads it)
   *   cells/dt=2024-01-01/cell=N/...    one day's assigned vectors
-  *   _committed/2024-01-01             day marker (same protocol as DedupStore)
+  *   _committed/2024-01-01             day marker (the [[DayStore]] protocol)
   * }}}
   *
   * `dt` is the OUTER partition dim so a day commits as one subtree;
@@ -42,10 +42,10 @@ import org.apache.hadoop.fs.Path
   *    swap (the SnapshotStore pointer pattern), never in-place
   *    mutation. Small files are handled separately: [[compact]]
   *    (round 12) folds aged days into cell-partitioned merged
-  *    pseudo-days under the DedupStore tiered protocol, so the
+  *    pseudo-days under the [[DayStore]] tiered protocol, so the
   *    day×cell dir count stays bounded without touching geometry.
   *  - Idempotent re-append: the day's prior partitions are cleared
-  *    first (the [[DedupStore]] commitDay discipline — dynamic
+  *    first (the [[DayStore.commitDay]] discipline — dynamic
   *    overwrite only replaces partitions PRESENT in the incoming
   *    frame, so a corrected replay whose rows vacate a cell, or an
   *    empty replay, would otherwise leave stale vectors standing
@@ -75,7 +75,6 @@ import org.apache.hadoop.fs.Path
   * `nprobe/k · committed bytes` exactly as the batch index does. */
 object IvfStore {
 
-  private val MarkerDir = "_committed"
   private val MergedPrefix = MarkerProtocol.MergedPrefix
 
   /** Day-name prefix [[rebuild]] gives re-homed `merged-*` partitions
@@ -107,8 +106,22 @@ object IvfStore {
     * tie-break). */
   private val PqMarker = "_PQ_CODEBOOKS.txt"
 
-  private def fs(spark: SparkSession, root: String) =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** The two cell-partitioned tables: vectors and their PQ codes. */
+  private val Tables = Seq("cells", "codes")
+
+  /** The marker-protocol kernel over [[Tables]]; both pseudo-day kinds
+    * fold into the merged tier. */
+  private val dayStore = new DayStore("_committed", (_, _) => Tables,
+    // a folded day's rows live in the merged partition: a re-append
+    // would commit a SECOND copy and probes would double-count it
+    (day, root) => s"day '$day' of IVF store '$root' was already folded into " +
+      "a compacted partition; re-appending it would duplicate its vectors " +
+      "in every probe. Re-append is only supported inside compact()'s " +
+      "keepDays retention window — size keepDays to cover the longest " +
+      "replay horizon, or rebuild into a fresh root.",
+    isPseudoDay)
+
+  private def fs(spark: SparkSession, root: String) = dayStore.fs(spark, root)
 
   /** Every data leaf on disk (one glob), debris included — only
     * [[committedLeafFiles]] consumes it; no reader path may. */
@@ -227,13 +240,10 @@ object IvfStore {
 
   /** Days whose marker committed, sorted — EXCLUDING days a committed
     * `merged-*` compaction marker has replaced (their rows live in
-    * the merged partition — [[DedupStore.committedDays]]' rule) and
+    * the merged partition — [[DayStore.committedDays]]) and
     * INCLUDING committed merged pseudo-days. */
-  def committedDays(spark: SparkSession, root: String): Seq[String] = {
-    val (names, replaced) =
-      MarkerProtocol.markerState(fs(spark, root), new Path(root, MarkerDir))
-    names.filterNot(replaced).sorted
-  }
+  def committedDays(spark: SparkSession, root: String): Seq[String] =
+    dayStore.committedDays(spark, root)
 
   /** Assign `delta` against the frozen centroids and commit it as
     * `day`'s partitions (idempotent — see the re-append contract). */
@@ -246,62 +256,35 @@ object IvfStore {
   def append(delta: DataFrame, root: String, day: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
       lineage: Seq[String] = Nil): Unit = {
-    MarkerProtocol.requireDayName(day)
-    require(!day.startsWith(MergedPrefix),
-      s"'$MergedPrefix' is reserved for compaction markers, got '$day'")
     val spark = delta.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    // a day a committed compaction already folded can no longer be
-    // re-appended: its rows live in the merged partition, so the
-    // re-append would commit a SECOND copy under the day name and
-    // probes would double-count every duplicated vector (the
-    // DedupStore requireNotCompacted rule, double-count flavor)
-    val (_, replaced) =
-      MarkerProtocol.markerState(fs(spark, root), new Path(root, MarkerDir))
-    if (replaced.contains(day)) throw new IllegalStateException(
-      s"day '$day' of IVF store '$root' was already folded into a " +
-        "compacted partition; re-appending it would duplicate its vectors " +
-        "in every probe. Re-append is only supported inside compact()'s " +
-        "keepDays retention window — size keepDays to cover the longest " +
-        "replay horizon, or rebuild into a fresh root.")
     val cents = IvfIndex.open(spark, root) // refuses an uninitialized root
-    // RE-APPEND crash discipline (round 12): retract the day's marker
-    // BEFORE touching its partitions. A re-append clears + rewrites
-    // the day's data; with the old marker left live through that
-    // window, a crash between the pre-delete and the re-publish left
-    // a COMMITTED marker over an empty (or partial) day subtree —
-    // probes silently omitted that day's vectors. With the marker
-    // retracted first, ANY crash inside append leaves the day
-    // uncommitted — loudly visible via [[committedDays]] — and the
-    // recovery is the same "re-append it" as for a first-time crash.
-    val fsys = new Path(root).getFileSystem(conf)
-    fsys.delete(new Path(new Path(root, MarkerDir), day), false)
-    // clear the day's prior partitions (DedupStore.commitDay's rule):
-    // dynamic overwrite replaces only partitions present in the
-    // incoming frame — without the delete, a corrected replay that
-    // vacates a cell leaves the old cell's vectors committed
-    val dayDir = new Path(s"$root/cells/dt=$day")
-    fsys.delete(dayDir, true)
-    fsys.delete(new Path(s"$root/codes/dt=$day"), true)
-    val assigned = KMeans.assign(delta, cents, vecCol)
-      .select(col(idCol), col(vecCol), col("cell"))
-      .withColumn("dt", lit(day))
-    // clustered write (guide §6): ~one file per (dt, cell) at the gate
-    // SF instead of one file per scan-task × cell — the commit and
-    // every later probe scan pay per file (measured in commit 174aba3:
-    // Q146Prof append phases 1.3-1.4 -> 0.6-0.8 s). The clustering is
-    // a narrow coalesce, so append adds no exchange and stays map-only
-    // as the object scaladoc promises
-    PartitionedLayout.overwriteClustered(
-      assigned, s"$root/cells", Seq("dt", "cell"))
-    // PQ-enabled store: encode the day inline (from the just-written
-    // cells, so codes always match what the store serves), BEFORE the
-    // marker — one commit covers both tables, torn appends leave both
-    // invisible ([[enablePq]]'s layout contract)
-    pqState(spark, root).foreach { case (m, res) =>
-      writeCodesDay(spark, root, day, m, res) }
-    MarkerProtocol.atomicMarker(conf, new Path(root, MarkerDir), day,
-      if (lineage.isEmpty) "" else lineage.mkString("\n") + "\n")
+    // the kernel's commit refuses a folded day, then RETRACTS the day's
+    // marker before touching its partitions (a crash anywhere inside
+    // append leaves the day uncommitted — loudly visible via
+    // [[committedDays]] — never a live marker over an empty or partial
+    // subtree that probes would silently omit) and clears the day in
+    // both tables: dynamic overwrite replaces only partitions present
+    // in the incoming frame, so a corrected replay that vacates a cell
+    // would otherwise leave the old cell's vectors committed
+    dayStore.commitDay(spark, root, day, Tables, lineage) {
+      val assigned = KMeans.assign(delta, cents, vecCol)
+        .select(col(idCol), col(vecCol), col("cell"))
+        .withColumn("dt", lit(day))
+      // clustered write (guide §6): ~one file per (dt, cell) at the gate
+      // SF instead of one file per scan-task × cell — the commit and
+      // every later probe scan pay per file (measured in commit 174aba3:
+      // Q146Prof append phases 1.3-1.4 -> 0.6-0.8 s). The clustering is
+      // a narrow coalesce, so append adds no exchange and stays map-only
+      // as the object scaladoc promises
+      PartitionedLayout.overwriteClustered(
+        assigned, s"$root/cells", Seq("dt", "cell"))
+      // PQ-enabled store: encode the day inline (from the just-written
+      // cells, so codes always match what the store serves), BEFORE the
+      // marker — one commit covers both tables, torn appends leave both
+      // invisible ([[enablePq]]'s layout contract)
+      pqState(spark, root).foreach { case (m, res) =>
+        writeCodesDay(spark, root, day, m, res) }
+    }
   }
 
   /** L2 top-k per query over the `nprobe` nearest cells of every
@@ -985,7 +968,7 @@ object IvfStore {
   case class CompactionReport(mergedDay: Option[String], foldedDays: Int,
       dayDirsBefore: Int, dayDirsAfter: Int, awaitingSweep: Int)
 
-  /** COMPACTION + retention for the IVF root — [[DedupStore.compact]]'s
+  /** COMPACTION + retention for the IVF root — the [[DayStore]]
     * tiered protocol applied to the `cells` table, closing the
     * small-files accumulator this store's own scaladoc warned about
     * (one dir per day×cell at daily cadence ≈ 93k dirs/year at
@@ -997,11 +980,12 @@ object IvfStore {
     * ⌈bytes/(k·targetFileBytes)⌉ files, id-hash-salted so a hot cell
     * still splits.
     *
-    * Protocol, verbatim from [[DedupStore.compact]]: merged partition
-    * written as uncommitted debris → ONE atomic marker whose content
-    * lists the replaced days TRANSITIVELY (so two-generation folds
-    * keep protecting inner days) → sweep deferred to the START of the
-    * next run (reader grace period). Tier policy via
+    * Protocol ([[DayStore.planCompaction]]/[[DayStore.commitMerge]]):
+    * merged partition written as uncommitted debris → ONE atomic
+    * marker whose content lists the replaced days TRANSITIVELY (so
+    * two-generation folds keep protecting inner days) → sweep
+    * deferred to the START of the next run (reader grace period).
+    * Tier policy via
     * `graft.store.maxMergedParts` (default 4): a run folds only the
     * newly-aged days until the merged tier would exceed the bound,
     * then folds the tier too — O(archive/maxMergedParts) amortized
@@ -1011,33 +995,19 @@ object IvfStore {
     * fresh-root REBUILD decision. */
   def compact(spark: SparkSession, root: String, keepDays: Int = 7,
       targetFileBytes: Long = 128L * 1024 * 1024): CompactionReport = {
-    require(keepDays >= 0, "keepDays must be >= 0")
+    // rebuilt-* pseudo-days count as the MERGED tier, never as
+    // retention-window days (see [[RebuiltPrefix]])
+    val plan = dayStore.planCompaction(spark, root, keepDays)
     val f = fs(spark, root)
-    val conf = spark.sparkContext.hadoopConfiguration
-    sweepReplaced(f, root) // heal a prior crash between commit and sweep
     def dayDirs(): Int =
       Option(f.globStatus(new Path(s"$root/cells/dt=*")))
         .map(_.length).getOrElse(0)
     val before = dayDirs()
-    val all = committedDays(spark, root)
-    // rebuilt-* pseudo-days count as the MERGED tier, never as
-    // retention-window days (see [[RebuiltPrefix]])
-    val (alreadyMerged, realDays) = all.partition(isPseudoDay)
-    val newOld = realDays.dropRight(keepDays)
-    val maxMergedParts = spark.conf.getOption("graft.store.maxMergedParts")
-      .map(_.toInt).getOrElse(4)
-    require(maxMergedParts >= 1, "graft.store.maxMergedParts must be >= 1")
-    val mergeDays =
-      if (alreadyMerged.size + 1 > maxMergedParts) alreadyMerged ++ newOld
-      else newOld
     // a no-op run still reports dirs the PREVIOUS fold left awaiting
-    // sweep zero — sweepReplaced above just cleared them
-    if (mergeDays.size < 2 || newOld.isEmpty)
-      return CompactionReport(None, 0, before, before, awaitingSweep = 0)
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(mergeDays.mkString(",").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val mergedDay = s"$MergedPrefix${mergeDays.size}d-$digest"
+    // sweep zero — the plan's sweep just cleared them
+    val merge = plan.getOrElse(
+      return CompactionReport(None, 0, before, before, awaitingSweep = 0))
+    val (mergedDay, mergeDays) = (merge.day, merge.days)
     // fold BOTH cell-partitioned tables under the one merged day —
     // the codes sibling ([[enablePq]]) follows cells through every
     // layout transition, or compacted days would lose ADC serving
@@ -1079,13 +1049,7 @@ object IvfStore {
     // ones are empty — the name alone then stands in), and losing
     // that lineage at the next tier-fold would blind catchUp's
     // content-coverage check
-    val content = mergeDays.flatMap { dd =>
-      if (isPseudoDay(dd))
-        dd +: MarkerProtocol.readMarker(f, new Path(s"$root/$MarkerDir", dd))
-      else Seq(dd)
-    }.distinct
-    MarkerProtocol.atomicMarker(conf, new Path(root, MarkerDir), mergedDay,
-      content.mkString("\n") + "\n")
+    dayStore.commitMerge(spark, root, merge)
     // the dirs this fold replaced stand until the NEXT run's sweep
     // (reader grace period) — count the ones still on disk so
     // dayDirsAfter is interpretable (see [[CompactionReport]])
@@ -1192,7 +1156,7 @@ object IvfStore {
       d: String): Seq[String] =
     if (!isPseudoDay(d)) Nil
     else MarkerProtocol.readMarker(fs(spark, root),
-      new Path(new Path(root, MarkerDir), d))
+      new Path(dayStore.markerDir(root), d))
 
   /** Schema of the pointer snapshot: one row — the current IVF root
     * path, plus (round 17, the TextIndexStore `discipline` pattern) a
@@ -1373,10 +1337,10 @@ object IvfStore {
       newRoot: String): Seq[String] = {
     def alias(d: String): String = if (d.startsWith(MergedPrefix))
       s"$RebuiltPrefix${d.stripPrefix(MergedPrefix)}" else d
-    val newMarkers = new Path(newRoot, MarkerDir)
-    val oldMarkers = new Path(oldRoot, MarkerDir)
+    val newMarkers = dayStore.markerDir(newRoot)
+    val oldMarkers = dayStore.markerDir(oldRoot)
     val (fNew, fOld) = (fs(spark, newRoot), fs(spark, oldRoot))
-    val (newNames, newReplaced) = MarkerProtocol.markerState(fNew, newMarkers)
+    val (newNames, newReplaced) = dayStore.markerState(fNew, newRoot)
     // NAME-level coverage: every name the target commits OR ever
     // folded (replaced days live on inside merged partitions)
     val coveredNames: Set[String] = newNames.toSet ++ newReplaced
@@ -1435,51 +1399,19 @@ object IvfStore {
     gap.map(alias)
   }
 
-  /** GC of days replaced by a COMMITTED compaction marker plus
-    * `dt=merged-*` debris whose marker never committed — readers
-    * already ignore all of it. Runs only at the start of [[compact]]
-    * (the grace-period rule its scaladoc explains). */
-  private def sweepReplaced(f: org.apache.hadoop.fs.FileSystem,
-      root: String): Unit = {
-    val markerDir = new Path(root, MarkerDir)
-    val (names, replaced) = MarkerProtocol.markerState(f, markerDir)
-    replaced.foreach { dd =>
-      f.delete(new Path(s"$root/cells/dt=$dd"), true)
-      f.delete(new Path(s"$root/codes/dt=$dd"), true)
-      f.delete(new Path(markerDir, dd), false)
-    }
-    Seq("cells", "codes").foreach { t =>
-      Option(f.globStatus(new Path(s"$root/$t/dt=$MergedPrefix*")))
-        .getOrElse(Array.empty)
-        .map(_.getPath.getName.stripPrefix("dt="))
-        .filterNot(names.contains)
-        .foreach(dd => f.delete(new Path(s"$root/$t/dt=$dd"), true))
-    }
-  }
-
-  /** STORE INTEGRITY AUDIT — [[DedupStore.fsck]]'s discipline for the
-    * IVF root (report-only; [[compact]] owns GC, re-append owns
-    * repair). Findings reuse [[DedupStore.FsckFinding]] so operators
-    * aggregate one finding type across every store kind.
+  /** STORE INTEGRITY AUDIT for the IVF root (report-only; [[compact]]
+    * owns GC, re-append owns repair), in the shared [[FsckFinding]]
+    * contract so operators aggregate one finding type across every
+    * store kind.
     *
-    * Shallow (default) — metadata only, O(days):
+    * Shallow (default) — metadata only, O(days): the kernel's marker
+    * and partition checks ([[DayStore.fsckShallow]]) plus
     *  - `no-centroids` (error): committed days but no `_CENTROIDS.txt`
     *    — every probe fails to open; the marker was deleted or the
     *    root was hand-assembled.
-    *  - `tmp-marker` (warn): a crashed commit's `.DAY.tmp` under
-    *    `_committed` — the day never published.
-    *  - `empty-merged-marker` / `double-merged` (error): a `merged-*`
-    *    marker replacing nothing, or a day claimed by two live merged
-    *    markers (probes double-count its vectors).
-    *  - `invalid-day-name` (warn): a marker the delete paths cannot
-    *    address as a literal `dt=` path.
-    *  - `orphan-partition` (warn): a `dt=` dir no marker ever named —
-    *    crash debris between write and publish; re-append or delete.
     *  - `empty-day` (warn): a committed day with zero data files
     *    (every appended row was unusable) — [[probe]]'s loud guard
     *    fires only when ALL days are empty; this names the day.
-    *  - `merged-debris` / `awaiting-sweep` (info): protocol
-    *    transients, swept by the next [[compact]].
     *
     * Deep (`deep = true`) — one full scan:
     *  - `cell-mismatch` (error): a stored vector whose `cell`
@@ -1506,80 +1438,25 @@ object IvfStore {
     * every audit, `force = true` recounts all. `dup-identity` is the
     * one genuinely CROSS-day deep invariant (a key on two days) and
     * stays global every audit — it reads only the slim id column.
-    * (The same split does NOT fit [[DedupStore.fsck]]'s deep checks:
-    * dup-identity and the df/postings recounts there are all
-    * cross-day folds, so day-scoping them would be unsound — its
-    * deep pass stays a priced full scan by design.) */
+    * The watermark bookkeeping is the kernel's ([[DayStore.audit]]). */
   def fsck(spark: SparkSession, root: String,
       deep: Boolean = false,
-      force: Boolean = false): Seq[DedupStore.FsckFinding] = {
+      force: Boolean = false): Seq[FsckFinding] = {
     val f = fs(spark, root)
-    val markerDir = new Path(root, MarkerDir)
-    val out = scala.collection.mutable.ArrayBuffer.empty[DedupStore.FsckFinding]
+    val out = scala.collection.mutable.ArrayBuffer.empty[FsckFinding]
     if (!f.exists(new Path(root))) return Nil
-    val (names, replaced) = MarkerProtocol.markerState(f, markerDir)
-    val live = (d: String) => names.contains(d) && !replaced.contains(d)
-    val committed = names.filterNot(replaced).sorted
+    val committed = committedDays(spark, root)
 
     if (committed.nonEmpty &&
         scala.util.Try(IvfIndex.open(spark, root)).isFailure)
-      out += DedupStore.FsckFinding("error", "no-centroids", root,
+      out += FsckFinding("error", "no-centroids", root,
         "committed days but no readable _CENTROIDS.txt — every probe " +
           "fails to open; restore the marker or rebuild into a fresh root")
-
-    if (f.exists(markerDir))
-      f.listStatus(markerDir).toSeq.map(_.getPath.getName)
-        .filter(n => n.startsWith(".") && n.endsWith(".tmp"))
-        .foreach(n => out += DedupStore.FsckFinding("warn", "tmp-marker", n,
-          "crashed marker commit (create happened, rename did not); the " +
-            "day never published — re-append it"))
-
-    names.filter(n => n.startsWith(MergedPrefix) && live(n))
-      .filter(n => MarkerProtocol.readMarker(f, new Path(markerDir, n)).isEmpty)
-      .foreach(n => out += DedupStore.FsckFinding("error", "empty-merged-marker",
-        n, "live compaction marker replacing no days — compact() never " +
-          "writes one; suspect tampering"))
-    names.filter(n => n.startsWith(MergedPrefix) && live(n))
-      .flatMap(m => MarkerProtocol.readMarker(f, new Path(markerDir, m))
-        .filterNot(_.startsWith(MergedPrefix)).map(_ -> m))
-      .groupBy(_._1).filter(_._2.size > 1)
-      .foreach { case (d, ms) =>
-        out += DedupStore.FsckFinding("error", "double-merged", d,
-          s"day claimed by ${ms.size} live compaction markers " +
-            s"(${ms.map(_._2).sorted.mkString(", ")}) — probes double-count " +
-            "its vectors") }
-
-    names.filterNot(_.startsWith(MergedPrefix))
-      .filterNot(n => scala.util.Try(MarkerProtocol.requireDayName(n)).isSuccess)
-      .foreach(n => out += DedupStore.FsckFinding("warn", "invalid-day-name", n,
-        "marker name outside [A-Za-z0-9._-]+ — the literal dt=DAY delete " +
-          "paths cannot address its partitions"))
-
-    val everNamed = names.toSet ++ replaced
-    Seq("cells", "codes").foreach { t =>
-      val dtDirs = Option(f.globStatus(new Path(s"$root/$t/dt=*")))
-        .getOrElse(Array.empty).toSeq
-        .map(_.getPath.getName.stripPrefix("dt="))
-      dtDirs.sorted.foreach { d =>
-        if (!everNamed.contains(d)) {
-          if (d.startsWith(MergedPrefix))
-            out += DedupStore.FsckFinding("info", "merged-debris", s"$t/dt=$d",
-              "uncommitted merged partition (crashed compact); the next " +
-                "compact() sweeps it")
-          else
-            out += DedupStore.FsckFinding("warn", "orphan-partition", s"$t/dt=$d",
-              "partition with no marker (crash between write and publish): " +
-                "invisible to probes — re-append the day or delete the dir")
-        } else if (replaced.contains(d))
-          out += DedupStore.FsckFinding("info", "awaiting-sweep", s"$t/dt=$d",
-            "replaced by a committed compaction; swept at the next compact() " +
-              "after the reader grace period")
-      }
-    }
+    out ++= dayStore.fsckShallow(f, root)
     committed
       .filter(d => Option(f.globStatus(new Path(s"$root/cells/dt=$d/cell=*/part-*")))
         .forall(_.isEmpty))
-      .foreach(d => out += DedupStore.FsckFinding("warn", "empty-day", d,
+      .foreach(d => out += FsckFinding("warn", "empty-day", d,
         "committed day with zero data files (every appended row was " +
           "unusable) — harmless to probes, but the feed produced nothing " +
           "indexable that day"))
@@ -1590,7 +1467,7 @@ object IvfStore {
     if (pqm.isDefined)
       committed.filter(d => dayHasFiles(f, root, "cells", d) &&
           !dayHasFiles(f, root, "codes", d))
-        .foreach(d => out += DedupStore.FsckFinding("error", "codes-missing",
+        .foreach(d => out += FsckFinding("error", "codes-missing",
           s"codes/dt=$d",
           "committed day has cells but no PQ codes — adcProbe refuses the " +
             "whole store until repaired; run backfillCodes"))
@@ -1611,47 +1488,28 @@ object IvfStore {
           dataSchema = Some(ds))
         val dups = allCells.groupBy(col(idCol)).count()
           .filter(col("count") > 1).count()
-        if (dups > 0) out += DedupStore.FsckFinding("warn", "dup-identity",
+        if (dups > 0) out += FsckFinding("warn", "dup-identity",
           s"cells.$idCol", s"$dups ids committed on more than one day — " +
             "append does not dedup (curation suppresses upstream), but on a " +
             "stable-id corpus suspect restored partitions; probes return " +
             "these ids twice")
         // DAY-SCOPED recounts under the audit watermark (scaladoc)
-        val auditDir = new Path(root, "_audit")
         val geom = {
           val cBytes = MarkerProtocol.readMarker(f, new Path(root,
             "_CENTROIDS.txt")).mkString("\n")
           val pBytes = if (pqm.isDefined)
             MarkerProtocol.readMarker(f, new Path(root, PqMarker)).mkString("\n")
             else ""
-          java.security.MessageDigest.getInstance("MD5")
-            .digest(s"$cBytes|$pBytes".getBytes("UTF-8"))
-            .map("%02x".format(_)).mkString.take(16)
+          MarkerProtocol.md5Hex(s"$cBytes|$pBytes").take(16)
         }
-        def dayFp(d: String): String = {
-          val body = Seq("cells", "codes").flatMap { t =>
+        def dayFp(d: String): String =
+          MarkerProtocol.md5Hex(Tables.flatMap { t =>
             Option(f.globStatus(new Path(s"$root/$t/dt=$d/cell=*/part-*")))
               .map(_.toSeq).getOrElse(Nil)
               .map(st => s"$t/${st.getPath.getParent.getName}/" +
                 s"${st.getPath.getName}:${st.getLen}")
-          }.sorted.mkString("\n")
-          java.security.MessageDigest.getInstance("MD5")
-            .digest(body.getBytes("UTF-8")).map("%02x".format(_)).mkString +
-            s":$geom"
-        }
-        val fps = committed.map(d => d -> dayFp(d)).toMap
-        val watermarks: Map[String, String] =
-          if (!f.exists(auditDir)) Map.empty
-          else f.listStatus(auditDir).toSeq.map(_.getPath)
-            .filterNot(_.getName.startsWith("."))
-            .map(p => p.getName ->
-              MarkerProtocol.readMarker(f, p).headOption.getOrElse("")).toMap
-        watermarks.keys.filterNot(committed.contains)
-          .foreach(d => f.delete(new Path(auditDir, d), false))
-        val toRecount =
-          if (force) committed
-          else committed.filter(d => !watermarks.get(d).contains(fps(d)))
-        if (toRecount.nonEmpty) {
+          }.sorted.mkString("\n")) + s":$geom"
+        dayStore.audit(spark, root, committed, force)(dayFp) { toRecount =>
           val cells = cellsFrame(spark, root, leaves.head.getPath, toRecount,
             dataSchema = Some(ds)).persist()
           try {
@@ -1684,13 +1542,13 @@ object IvfStore {
           // writes them); probes skip them defensively — undefined
           // distance — but they waste scan bytes and the restore that
           // brought them is worth investigating
-          if (unusable > 0) out += DedupStore.FsckFinding("warn",
+          if (unusable > 0) out += FsckFinding("warn",
             "unusable-vector", "cells", s"$unusable stored vectors are " +
               "null/wrong-dimension/non-finite — append corrupt-drops these, " +
               "so they came from a restore or hand-copy; probes skip them " +
               "(undefined distance), they only waste scan bytes — rewrite " +
               "the affected days or rebuild")
-          if (bad > 0) out += DedupStore.FsckFinding("error", "cell-mismatch",
+          if (bad > 0) out += FsckFinding("error", "cell-mismatch",
             "cells", s"$bad vectors stored under a cell that is not their " +
               "argmin against the committed centroids — probes at nprobe < k " +
               "silently lose them; centroids and partitions diverged (restored " +
@@ -1747,18 +1605,18 @@ object IvfStore {
               val miss = perDayPq.values.map(_._1).sum
               val bad2 = perDayPq.values.map(_._2).sum
               val orph = perDayPq.values.map(_._3).sum
-              if (miss > 0) out += DedupStore.FsckFinding("error",
+              if (miss > 0) out += FsckFinding("error",
                 "codes-missing-rows", "codes", s"$miss stored vectors have " +
                   "no PQ code row — ADC probes silently lose them; run " +
                   "backfillCodes on the affected days (after deleting their " +
                   "codes partitions) or rebuild")
-              if (bad2 > 0) out += DedupStore.FsckFinding("error",
+              if (bad2 > 0) out += FsckFinding("error",
                 "code-mismatch", "codes", s"$bad2 stored codes differ from a " +
                   "fresh encode against the committed codebooks — codebooks " +
                   "and codes diverged (hand-replaced _PQ_CODEBOOKS.txt or " +
                   "restored codes partitions?); every ADC distance over " +
                   "them is wrong — rebuild into a fresh root")
-              if (orph > 0) out += DedupStore.FsckFinding("error",
+              if (orph > 0) out += FsckFinding("error",
                 "codes-orphan-rows", "codes", s"$orph stored code rows have " +
                   "no matching vector in cells — restored/hand-copied codes " +
                   "partitions; a rerank-less adcProbe returns these ghost " +
@@ -1766,20 +1624,12 @@ object IvfStore {
                   "and backfillCodes, or rebuild")
             }
           }
-          // clean days watermark at their audit-time fingerprint;
-          // dirty days keep none and re-surface every audit
-          toRecount.foreach { d =>
-            if (dirtyDays.contains(d))
-              f.delete(new Path(auditDir, d), false): Unit
-            else MarkerProtocol.atomicMarker(
-              spark.sparkContext.hadoopConfiguration, auditDir, d, fps(d))
-          }
+          dirtyDays
           } finally { cells.unpersist(); () }
         }
       }
     }
-    val rank = Map("error" -> 0, "warn" -> 1, "info" -> 2)
-    out.sortBy(fi => (rank(fi.severity), fi.check, fi.subject)).toSeq
+    FsckFinding.sorted(out.toSeq)
   }
 
   /** DRIFT MONITOR — the evidence feed for the fresh-root rebuild

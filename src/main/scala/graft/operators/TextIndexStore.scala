@@ -18,10 +18,10 @@ import org.apache.spark.sql.types._
   * terms — plus one O(days) stats read; the corpus text is never
   * touched after ingest.
   *
-  * Layout under `root` (the [[DedupStore]]/[[IvfStore]] marker
-  * protocol — day marker commits atomically AFTER the partitions
-  * land; torn appends are invisible; re-running a day overwrites
-  * only that day's partitions then re-commits):
+  * Layout under `root` (the [[DayStore]] marker protocol shared with
+  * [[DedupStore]]/[[IvfStore]] — day marker commits atomically AFTER
+  * the partitions land; torn appends are invisible; re-running a day
+  * overwrites only that day's partitions then re-commits):
   *  - `postings/dt=<day>/` — (word, doc_id, tf, dl): one row per
   *    distinct (doc, word), `dl` DENORMALIZED into the posting
   *    (the Lucene norms-inline trick) so scoring never joins a
@@ -54,7 +54,7 @@ import org.apache.spark.sql.types._
   * partitions, disjoint markers); probes read the committed view
   * only ([[PartitionedLayout.readDays]] — no replaced-day debris,
   * no listing race). [[compact]] folds aged day partitions under the
-  * [[DedupStore]] merged-marker protocol — simpler here because BOTH
+  * [[DayStore]] merged-marker protocol — simpler here because BOTH
   * tables are purely additive (postings concatenate; stats rows
   * re-sum to one), so the fold is a concatenate + re-sort, never a
   * recompute.
@@ -64,8 +64,18 @@ object TextIndexStore {
   val K1 = 1.2
   val B = 0.75
 
-  private def fsOf(spark: SparkSession, root: String) =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val Tables = Seq("postings", "stats")
+
+  /** The marker-protocol kernel over this layout: `markers/` plus the
+    * two additive tables. */
+  private val dayStore = new DayStore("markers", (_, _) => Tables,
+    (day, root) => s"day '$day' of text index '$root' was already folded " +
+      "into a compacted partition; re-appending it would double-count its " +
+      "postings in every probe. Re-append is only supported inside " +
+      "compact()'s keepDays retention window — size keepDays to cover the " +
+      "longest replay horizon.")
+
+  private def fsOf(spark: SparkSession, root: String) = dayStore.fs(spark, root)
 
   private def postingsSchema = StructType(Seq(
     StructField("word", StringType), StructField("doc_id", LongType),
@@ -77,11 +87,8 @@ object TextIndexStore {
     StructField("dt", StringType)))
 
   /** Committed (marker-visible) day names, sorted. */
-  def committedDays(spark: SparkSession, root: String): Seq[String] = {
-    val (names, replaced) = MarkerProtocol.markerState(
-      fsOf(spark, root), new Path(s"$root/markers"))
-    names.filterNot(replaced).sorted
-  }
+  def committedDays(spark: SparkSession, root: String): Seq[String] =
+    dayStore.committedDays(spark, root)
 
   /** Tokenize + index `docs` as `day`, commit the marker. Returns the
     * number of INDEXED docs (≥1 token; null-text rows corrupt-drop).
@@ -89,74 +96,49 @@ object TextIndexStore {
     * (dynamic partition overwrite) and re-commits the marker. */
   def append(docs: DataFrame, root: String, day: String,
       idCol: String = "doc_id", textCol: String = "text"): Long = {
-    MarkerProtocol.requireDayName(day)
-    require(!day.startsWith(MarkerProtocol.MergedPrefix),
-      s"'${MarkerProtocol.MergedPrefix}' is reserved for compaction markers, got '$day'")
     val spark = docs.sparkSession
-    // a day a committed compaction already folded can no longer be
-    // re-appended: its postings live on in the merged partition, so
-    // the re-run would commit a SECOND copy under the day name —
-    // doubled tf/df/stats in every probe (the IvfStore double-count
-    // flavor of DedupStore's requireNotCompacted)
-    val (_, replacedNow) = MarkerProtocol.markerState(
-      fsOf(spark, root), new Path(s"$root/markers"))
-    if (replacedNow.contains(day)) throw new IllegalStateException(
-      s"day '$day' of text index '$root' was already folded into a " +
-        "compacted partition; re-appending it would double-count its " +
-        "postings in every probe. Re-append is only supported inside " +
-        "compact()'s keepDays retention window — size keepDays to cover " +
-        "the longest replay horizon.")
-    graft.GraftExtensions.ensureRegistered(spark)
-    // RE-APPEND crash discipline (the IvfStore round-12 rule):
-    // retract the day's marker BEFORE rewriting its partitions. A
-    // crash mid-overwrite must leave the day loudly UNCOMMITTED —
-    // with the old marker live through the rewrite window, probes
-    // would silently score a partial day.
-    val f = fsOf(spark, root)
-    f.delete(new Path(s"$root/markers/$day"), false): Unit
-    // clear the day's prior partitions BEFORE the rewrite (round 15,
-    // advice — the [[IvfStore.append]] pre-delete, same reason):
-    // dynamic partition overwrite replaces nothing for a frame that
-    // carries no rows in a partition, so a corrected replay whose
-    // docs ALL corrupt-drop would leave the prior run's postings
-    // standing and re-commit the marker over them with a (0, null)
-    // stats row — probes would score ghost postings that N/avgdl
-    // exclude (exactly the skew the postings-without-stats fsck
-    // class describes)
-    f.delete(new Path(s"$root/postings/dt=$day"), true): Unit
-    f.delete(new Path(s"$root/stats/dt=$day"), true): Unit
-    // one tokenize pass: postings carry dl inline (see layout note).
-    // Indexable = NOT blank — the F1 validity family's isBlank rlike,
-    // explicit because the engine's split discipline KEEPS empty
-    // tokens (q68 parity: '' tokenizes to one ''-word) and its trim
-    // is space-only (a tab-only doc survives trim ≠ ''), yet a
-    // whitespace-only doc carries nothing retrievable; q149's oracle
-    // scopes its docs0 CTE with the same anchored-regex predicate
-    val base = docs
-      .filter(col(idCol).isNotNull && col(textCol).isNotNull &&
-        !col(textCol).rlike("^\\s*$"))
-      // try_cast, not cast: under ANSI a malformed id would kill the
-      // whole append job; the corrupt-drop contract wants the ROW cut
-      .select(expr(s"try_cast(`$idCol` AS BIGINT)").as("doc_id"),
-        expr(s"word_counts($textCol)").as("wc"),
-        size(split(trim(col(textCol)), "\\s+")).cast("long").as("dl"))
-      // an id that fails the cast nulls AFTER the isNotNull check
-      // above — corrupt-drop it here, not as a null-keyed posting
-      // every probe would join against
-      .filter(col("doc_id").isNotNull)
-    val posted = base
-      .select(explode(col("wc")).as("w"), col("doc_id"), col("dl"))
-      .select(col("w.word").as("word"), col("doc_id"),
-        col("w.tf").cast("long").as("tf"), col("dl"), lit(day).as("dt"))
-      // word-sorted files: the probe's IN-filter prunes at row-group
-      // stats; doc_id secondary keeps the layout deterministic
-      .sortWithinPartitions(col("word"), col("doc_id"))
-    PartitionedLayout.overwritePartitions(posted, s"$root/postings", Seq("dt"))
-    val st = base.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-      .select(col("n_docs"), col("sum_dl"), lit(day).as("dt"))
-    PartitionedLayout.overwritePartitions(st, s"$root/stats", Seq("dt"))
-    MarkerProtocol.atomicMarker(spark.sparkContext.hadoopConfiguration,
-      new Path(s"$root/markers"), day)
+    // the kernel's commit refuses a day a committed compaction already
+    // folded (its postings live on in the merged partition — a re-run
+    // would double tf/df/stats in every probe), retracts the marker
+    // BEFORE rewriting (a crash mid-overwrite leaves the day loudly
+    // UNCOMMITTED, never a live marker over a partial day), and clears
+    // both tables' partitions first: dynamic partition overwrite
+    // replaces nothing for a frame with no rows in a partition, so a
+    // corrected replay whose docs ALL corrupt-drop would otherwise
+    // leave the prior postings standing under a (0, null) stats row
+    dayStore.commitDay(spark, root, day, Tables) {
+      graft.GraftExtensions.ensureRegistered(spark)
+      // one tokenize pass: postings carry dl inline (see layout note).
+      // Indexable = NOT blank — the F1 validity family's isBlank rlike,
+      // explicit because the engine's split discipline KEEPS empty
+      // tokens (q68 parity: '' tokenizes to one ''-word) and its trim
+      // is space-only (a tab-only doc survives trim ≠ ''), yet a
+      // whitespace-only doc carries nothing retrievable; q149's oracle
+      // scopes its docs0 CTE with the same anchored-regex predicate
+      val base = docs
+        .filter(col(idCol).isNotNull && col(textCol).isNotNull &&
+          !col(textCol).rlike("^\\s*$"))
+        // try_cast, not cast: under ANSI a malformed id would kill the
+        // whole append job; the corrupt-drop contract wants the ROW cut
+        .select(expr(s"try_cast(`$idCol` AS BIGINT)").as("doc_id"),
+          expr(s"word_counts($textCol)").as("wc"),
+          size(split(trim(col(textCol)), "\\s+")).cast("long").as("dl"))
+        // an id that fails the cast nulls AFTER the isNotNull check
+        // above — corrupt-drop it here, not as a null-keyed posting
+        // every probe would join against
+        .filter(col("doc_id").isNotNull)
+      val posted = base
+        .select(explode(col("wc")).as("w"), col("doc_id"), col("dl"))
+        .select(col("w.word").as("word"), col("doc_id"),
+          col("w.tf").cast("long").as("tf"), col("dl"), lit(day).as("dt"))
+        // word-sorted files: the probe's IN-filter prunes at row-group
+        // stats; doc_id secondary keeps the layout deterministic
+        .sortWithinPartitions(col("word"), col("doc_id"))
+      PartitionedLayout.overwritePartitions(posted, s"$root/postings", Seq("dt"))
+      val st = base.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
+        .select(col("n_docs"), col("sum_dl"), lit(day).as("dt"))
+      PartitionedLayout.overwritePartitions(st, s"$root/stats", Seq("dt"))
+    }
     val stRow = PartitionedLayout.readDays(spark, s"$root/stats", statsSchema,
       Seq(day)).select(col("n_docs")).collect()
     if (stRow.isEmpty) 0L else stRow.head.getLong(0)
@@ -446,8 +428,6 @@ object TextIndexStore {
       .filter(col("rank") <= topK)
   }
 
-  private val Tables = Seq("postings", "stats")
-
   // -----------------------------------------------------------------
   // POINTERED ROOT (round 15) — the [[IvfStore.publishRoot]] pattern
   // for the retrieval store, needed the day its tokenization
@@ -538,12 +518,8 @@ object TextIndexStore {
     * plain days plus every day a live merged marker's (transitive)
     * content lists. The unit [[missingDays]] diffs on — exact across
     * compaction on either side, because folds carry their lineage. */
-  def originDays(spark: SparkSession, root: String): Set[String] = {
-    val f = fsOf(spark, root)
-    val (names, replaced) = MarkerProtocol.markerState(f, new Path(s"$root/markers"))
-    names.filterNot(_.startsWith(MarkerProtocol.MergedPrefix)).toSet ++
-      replaced.filterNot(_.startsWith(MarkerProtocol.MergedPrefix))
-  }
+  def originDays(spark: SparkSession, root: String): Set[String] =
+    dayStore.knownDays(spark, root).toSet
 
   /** Origin days committed at `oldRoot` that `newRoot` does not cover
     * yet — what a reindex still has to re-ingest from source. */
@@ -599,65 +575,17 @@ object TextIndexStore {
     }
   }
 
-  private def partFiles(f: org.apache.hadoop.fs.FileSystem,
-      dir: Path): Seq[org.apache.hadoop.fs.FileStatus] =
-    if (!f.exists(dir)) Nil
-    else f.listStatus(dir).toSeq.filter(s =>
-      s.isFile && s.getPath.getName.startsWith("part-"))
-
-  /** Deterministic digest of a day's on-disk state across both
-    * tables — the deep-audit watermark's change detector. Every write
-    * path lands fresh part- names (UUID'd) and the fold changes the
-    * listing wholesale, so names+lengths move on any mutation. */
-  private def dayFingerprint(f: org.apache.hadoop.fs.FileSystem,
-      root: String, day: String): String = {
-    val body = Tables.flatMap { t =>
-      partFiles(f, new Path(s"$root/$t/dt=$day"))
-        .map(st => s"$t/${st.getPath.getName}:${st.getLen}")
-    }.sorted.mkString("\n")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(body.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
-
   /** part-file count over the committed view — the [[compact]]
     * before/after metric. */
-  def committedFileCount(spark: SparkSession, root: String): Int = {
-    val f = fsOf(spark, root)
-    val days = committedDays(spark, root)
-    Tables.map(t =>
-      days.map(dd => partFiles(f, new Path(s"$root/$t/dt=$dd")).size).sum).sum
-  }
-
-  /** Delete replaced-day partitions + markers, and uncommitted
-    * `merged-*` partition debris from a crashed prior attempt whose
-    * merge set changed before the retry (the [[DedupStore]] sweep,
-    * verbatim semantics). Runs at the START of every [[compact]] —
-    * never at the end: a reader that planned just before the merge
-    * marker landed may still be scanning the replaced files, so they
-    * stay as invisible garbage for one maintenance cadence. */
-  private def sweepReplaced(f: org.apache.hadoop.fs.FileSystem,
-      root: String): Unit = {
-    val (names, replaced) = MarkerProtocol.markerState(f, new Path(s"$root/markers"))
-    val present = names.toSet
-    replaced.intersect(present).foreach { dd =>
-      Tables.foreach(t => f.delete(new Path(s"$root/$t/dt=$dd"), true))
-      f.delete(new Path(s"$root/markers", dd), false): Unit
-    }
-    Tables.foreach { t =>
-      Option(f.globStatus(new Path(s"$root/$t/dt=${MarkerProtocol.MergedPrefix}*")))
-        .getOrElse(Array.empty)
-        .map(_.getPath)
-        .filterNot(p => present.contains(p.getName.stripPrefix("dt=")))
-        .foreach(p => f.delete(p, true))
-    }
-  }
+  def committedFileCount(spark: SparkSession, root: String): Int =
+    dayStore.committedFileCount(spark, root)
 
   final case class CompactionReport(mergedDay: Option[String],
       foldedDays: Int, filesBefore: Int, filesAfter: Int)
 
   /** Fold all committed days older than the most recent `keepDays`
     * real days into one consolidated partition per table — the
-    * [[DedupStore.compact]] protocol (tmp-invisible merged partition,
+    * [[DayStore.planCompaction]] protocol (tmp-invisible merged partition,
     * ONE atomic marker whose content lists the replaced days
     * transitively, sweep at the START of the next run as the reader
     * grace period, deterministic digest-named merged day so crashed
@@ -670,35 +598,18 @@ object TextIndexStore {
     * always holds exactly one copy of every posting. */
   def compact(spark: SparkSession, root: String, keepDays: Int = 7,
       targetFileBytes: Long = 128L * 1024 * 1024): CompactionReport = {
-    require(keepDays >= 0, "keepDays must be >= 0")
-    val f = fsOf(spark, root)
-    sweepReplaced(f, root) // heal a prior crash between commit and sweep
+    val plan = dayStore.planCompaction(spark, root, keepDays)
     val before = committedFileCount(spark, root)
-    val all = committedDays(spark, root)
-    // retention counts REAL days only (merged-* pseudo-days sort
-    // after date-named days and would eat the protected window)
-    val (alreadyMerged, realDays) =
-      all.partition(_.startsWith(MarkerProtocol.MergedPrefix))
-    val newOld = realDays.dropRight(keepDays)
-    val maxMergedParts = spark.conf.getOption("graft.store.maxMergedParts")
-      .map(_.toInt).getOrElse(4)
-    require(maxMergedParts >= 1, "graft.store.maxMergedParts must be >= 1")
-    val mergeDays =
-      if (alreadyMerged.size + 1 > maxMergedParts) alreadyMerged ++ newOld
-      else newOld
-    if (mergeDays.size < 2 || newOld.isEmpty)
-      return CompactionReport(None, 0, before, before)
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(mergeDays.mkString(",").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val mergedDay = s"${MarkerProtocol.MergedPrefix}${mergeDays.size}d-$digest"
+    val merge = plan.getOrElse(return CompactionReport(None, 0, before, before))
+    val (mergedDay, mergeDays) = (merge.day, merge.days)
+    val f = fsOf(spark, root)
     def foldTable(t: String)(merge: DataFrame => DataFrame): Unit = {
       val dayDirs = mergeDays.map(dd => new Path(s"$root/$t/dt=$dd"))
-        .filter(dd => partFiles(f, dd).nonEmpty)
+        .filter(dd => dayStore.partFiles(f, dd).nonEmpty)
       val outDir = new Path(s"$root/$t/dt=$mergedDay")
       f.delete(outDir, true): Unit // debris from a crashed prior attempt
       if (dayDirs.nonEmpty) {
-        val bytes = dayDirs.flatMap(partFiles(f, _)).map(_.getLen).sum
+        val bytes = dayDirs.flatMap(dayStore.partFiles(f, _)).map(_.getLen).sum
         val shards = math.max(1L,
           math.ceil(bytes.toDouble / targetFileBytes).toLong).toInt
         // coalesce BEFORE merge: postings' merge step re-sorts by
@@ -718,30 +629,17 @@ object TextIndexStore {
     foldTable("stats")(st =>
       st.agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_docs"),
         sum(col("sum_dl")).as("sum_dl")))
-    // marker content = replaced names TRANSITIVELY (a folded merged-*
-    // contributes its own name plus every day its marker listed, so
-    // two-generation-old days stay protected from re-append)
-    val content = mergeDays.flatMap { dd =>
-      if (dd.startsWith(MarkerProtocol.MergedPrefix))
-        dd +: MarkerProtocol.readMarker(f, new Path(s"$root/markers", dd))
-      else Seq(dd)
-    }.distinct
-    MarkerProtocol.atomicMarker(spark.sparkContext.hadoopConfiguration,
-      new Path(s"$root/markers"), mergedDay, content.mkString("\n") + "\n")
+    dayStore.commitMerge(spark, root, merge)
     CompactionReport(Some(mergedDay), mergeDays.size, before,
       committedFileCount(spark, root))
   }
 
-  /** Integrity audit — the [[DedupStore.fsck]] invariants over this
-    * store's layout, report-only, reusing the same
-    * [[DedupStore.FsckFinding]] severity contract so the maintenance
-    * cron lands ONE findings schema across every store kind.
+  /** Integrity audit, report-only, in the shared [[FsckFinding]]
+    * severity contract.
     *
-    * Shallow (default, metadata only): crashed-commit tmp markers,
-    * empty / double-claiming merged markers, day names the delete
-    * paths cannot address, orphan partitions (write landed, marker
-    * did not), uncommitted merged debris, and sweep-grace transients.
-    * One layout-specific check: a committed day with POSTINGS but no
+    * Shallow (default, metadata only): the kernel's marker and
+    * partition checks ([[DayStore.fsckShallow]]) plus one
+    * layout-specific check: a committed day with POSTINGS but no
     * STATS partition is an `error` — the probe would score that day's
     * postings while N/avgdl exclude it, skewing every idf/tfc. (The
     * reverse — stats without postings — is the legitimate shape of a
@@ -765,110 +663,28 @@ object TextIndexStore {
     * Steady-state deep cost: the new days' postings, not the
     * archive's. */
   def fsck(spark: SparkSession, root: String,
-      deep: Boolean = false, force: Boolean = false): Seq[DedupStore.FsckFinding] = {
+      deep: Boolean = false, force: Boolean = false): Seq[FsckFinding] = {
     val f = fsOf(spark, root)
-    val out = scala.collection.mutable.ArrayBuffer.empty[DedupStore.FsckFinding]
-    val markerDir = new Path(s"$root/markers")
-    val (names, replaced) = MarkerProtocol.markerState(f, markerDir)
-    val live = names.filterNot(replaced).toSet
+    val out = scala.collection.mutable.ArrayBuffer.empty[FsckFinding]
+    out ++= dayStore.fsckShallow(f, root)
     val committed = committedDays(spark, root)
 
-    if (f.exists(markerDir))
-      f.listStatus(markerDir).toSeq.map(_.getPath.getName)
-        .filter(n => n.startsWith(".") && n.endsWith(".tmp"))
-        .foreach(n => out += DedupStore.FsckFinding("warn", "tmp-marker", n,
-          "crashed commit left a temp marker; the day never published — " +
-            "re-append it (idempotent) or delete the file"))
-
-    val liveMerged = names.filter(n =>
-      n.startsWith(MarkerProtocol.MergedPrefix) && live(n))
-    val contents = liveMerged
-      .map(m => m -> MarkerProtocol.readMarker(f, new Path(markerDir, m))).toMap
-    contents.foreach { case (m, c) =>
-      if (c.isEmpty) out += DedupStore.FsckFinding(
-        "error", "empty-merged-marker", m,
-        "committed compaction marker replaces no days — compact() never " +
-          "writes one; remove it and audit how it appeared")
-    }
-    contents.toSeq
-      .flatMap { case (m, c) =>
-        c.filterNot(_.startsWith(MarkerProtocol.MergedPrefix)).map(_ -> m) }
-      .groupBy(_._1).filter(_._2.size > 1)
-      .foreach { case (d, ms) =>
-        out += DedupStore.FsckFinding("error", "double-merged", d,
-          s"day claimed by ${ms.size} live compaction markers " +
-            s"(${ms.map(_._2).sorted.mkString(", ")}) — its postings are " +
-            "duplicated across merged partitions and every probe " +
-            "double-counts them") }
-
-    names.filterNot(_.startsWith(MarkerProtocol.MergedPrefix))
-      .filterNot(n =>
-        scala.util.Try(MarkerProtocol.requireDayName(n)).isSuccess)
-      .foreach(n => out += DedupStore.FsckFinding("warn", "invalid-day-name", n,
-        "marker name outside [A-Za-z0-9._-]+ — partition-dir encoding " +
-          "diverges from the literal dt=DAY paths the store deletes by"))
-
-    val everNamed = names.toSet ++ replaced
-    def dtNames(t: String): Seq[String] = {
-      val dir = new Path(s"$root/$t")
-      if (!f.exists(dir)) Nil
-      else f.listStatus(dir).toSeq.filter(_.isDirectory)
-        .map(_.getPath.getName).filter(_.startsWith("dt="))
-        .map(_.stripPrefix("dt="))
-    }
-    Tables.foreach { t =>
-      dtNames(t).sorted.foreach { d =>
-        if (!everNamed.contains(d)) {
-          if (d.startsWith(MarkerProtocol.MergedPrefix))
-            out += DedupStore.FsckFinding("info", "merged-debris", s"$t/dt=$d",
-              "uncommitted merged partition (crashed compact); the next " +
-                "compact() sweeps it")
-          else
-            out += DedupStore.FsckFinding("warn", "orphan-partition", s"$t/dt=$d",
-              "partition with no marker (crash between table write and " +
-                "publish): invisible to probes — re-append the day or " +
-                "delete the directory")
-        } else if (replaced.contains(d))
-          out += DedupStore.FsckFinding("info", "awaiting-sweep", s"$t/dt=$d",
-            "replaced by a committed compaction; swept at the next " +
-              "compact() after the reader grace period")
-      }
-    }
-    names.filter(replaced.contains).foreach(n =>
-      out += DedupStore.FsckFinding("info", "awaiting-sweep", s"markers/$n",
-        "replaced day's marker inside the sweep grace period"))
-
     // layout-specific: scored postings must be inside N/avgdl's scope
-    val statDays = dtNames("stats").filter(d =>
-      partFiles(f, new Path(s"$root/stats/dt=$d")).nonEmpty).toSet
+    val statDays = dayStore.dtNames(f, root, "stats").filter(d =>
+      dayStore.partFiles(f, new Path(s"$root/stats/dt=$d")).nonEmpty).toSet
     committed.filter(d =>
-        partFiles(f, new Path(s"$root/postings/dt=$d")).nonEmpty)
+        dayStore.partFiles(f, new Path(s"$root/postings/dt=$d")).nonEmpty)
       .filterNot(statDays.contains)
-      .foreach(d => out += DedupStore.FsckFinding("error", "postings-without-stats",
+      .foreach(d => out += FsckFinding("error", "postings-without-stats",
         s"postings/dt=$d",
         "committed day has postings but no stats row — probes score its " +
           "postings while N/avgdl exclude it, skewing every idf/tfc; " +
           "re-append the day"))
 
-    if (deep && committed.nonEmpty) {
-      val auditDir = new Path(s"$root/_audit")
-      val fps = committed.map(d => d -> dayFingerprint(f, root, d)).toMap
-      val watermarks: Map[String, String] =
-        if (!f.exists(auditDir)) Map.empty
-        else f.listStatus(auditDir).toSeq.map(_.getPath)
-          .filterNot(_.getName.startsWith("."))
-          .map(p => p.getName ->
-            MarkerProtocol.readMarker(f, p).headOption.getOrElse("")).toMap
-      // housekeeping: a watermark whose day left the committed set
-      // (replaced by compaction, retracted by a crashed re-append) is
-      // meaningless — drop it so a later same-named day re-audits
-      watermarks.keys.filterNot(committed.contains)
-        .foreach(d => f.delete(new Path(auditDir, d), false))
-      val toRecount =
-        if (force) committed
-        else committed.filter(d => !watermarks.get(d).contains(fps(d)))
-      val dirtyDays = scala.collection.mutable.Set.empty[String]
-      if (toRecount.nonEmpty) {
+    if (deep)
+      dayStore.audit(spark, root, committed, force)(
+          d => dayStore.filesFingerprint(f, root, d)) { toRecount =>
+        val dirtyDays = scala.collection.mutable.Set.empty[String]
         val posts = PartitionedLayout.readDays(
           spark, s"$root/postings", postingsSchema, toRecount)
           .filter(col("dt").isin(toRecount: _*))
@@ -884,7 +700,7 @@ object TextIndexStore {
         perDoc.filter(col("dl_min") =!= col("dl_max"))
           .select(col("dt"), col("doc_id")).collect().foreach { r =>
             dirtyDays += r.getString(0)
-            out += DedupStore.FsckFinding("error", "inconsistent-inline-dl",
+            out += FsckFinding("error", "inconsistent-inline-dl",
               s"dt=${r.getString(0)}/doc_id=${r.getLong(1)}",
               "a doc's postings disagree on its inline doc length — " +
                 "hand-edited partition; re-append the day")
@@ -913,7 +729,7 @@ object TextIndexStore {
             }
             if (!nOk || !dlOk) {
               dirtyDays += dt
-              out += DedupStore.FsckFinding("error", "stats-recount-mismatch",
+              out += FsckFinding("error", "stats-recount-mismatch",
                 s"dt=$dt",
                 s"stats row (n_docs=${n1.orNull}, sum_dl=${d1.orNull}) != " +
                   s"postings recount (n_docs=${n2.orNull}, " +
@@ -921,20 +737,9 @@ object TextIndexStore {
             }
           }
         } finally { perDoc.unpersist(); () }
-        // a clean recount commits the day's watermark (fingerprint at
-        // audit time — a later rewrite moves it and re-audits); a
-        // dirty one keeps none, so the fault re-surfaces every audit
-        // until repaired
-        toRecount.foreach { d =>
-          if (dirtyDays.contains(d))
-            f.delete(new Path(auditDir, d), false): Unit
-          else MarkerProtocol.atomicMarker(
-            spark.sparkContext.hadoopConfiguration, auditDir, d, fps(d))
-        }
+        dirtyDays
       }
-    }
 
-    val rank = Map("error" -> 0, "warn" -> 1, "info" -> 2)
-    out.sortBy(fi => (rank(fi.severity), fi.check, fi.subject)).toSeq
+    FsckFinding.sorted(out.toSeq)
   }
 }

@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.DedupStore
+import graft.operators.{DedupStore, FsckFinding}
 
 /** [[DedupStore.fsck]] — the store integrity audit. The marker
   * protocol is crash-safe only while its invariants hold; fsck is the
@@ -47,9 +47,9 @@ class DedupStoreFsckSpec extends AnyFunSuite with SparkSpec {
     root
   }
 
-  private def sev(fs: Seq[DedupStore.FsckFinding], s: String) =
+  private def sev(fs: Seq[FsckFinding], s: String) =
     fs.filter(_.severity == s)
-  private def checks(fs: Seq[DedupStore.FsckFinding]) =
+  private def checks(fs: Seq[FsckFinding]) =
     fs.map(_.check).toSet
 
   private def writeMarker(root: String, name: String, content: String): Unit = {

@@ -78,6 +78,40 @@ class DedupStoreSpec extends AnyFunSuite with SparkSpec {
       === Set.empty)
   }
 
+  test("a crashed RE-INGEST leaves the day uncommitted — never a live marker over cleared partitions") {
+    val root = Files.createTempDirectory("dstore-rc").toString
+    DedupStore.ingestExact(day1, root, "2024-01-01")
+    DedupStore.ingestExact(day2, root, "2024-01-02") // 12 (baseB) survives
+    assert(DedupStore.committedDays(spark, root) === Seq("2024-01-01", "2024-01-02"))
+
+    // re-ingest of the COMMITTED day 2 dies mid-write: a udf that
+    // throws at evaluation, which the exact ingest first reaches in
+    // the day's table write — after the day's partitions were cleared.
+    // The rows come from a range, not a local Seq: the optimizer folds
+    // expressions over a local relation while merely planning
+    val s = spark
+    import s.implicits._
+    val boom = org.apache.spark.sql.functions.udf((t: String) =>
+      if (t.length >= 0) throw new RuntimeException("simulated crash") else t)
+    val crashing = spark.range(2).select(($"id" + 11L).as("doc_id"),
+      boom(org.apache.spark.sql.functions.when($"id" === 0L, baseA)
+        .otherwise(baseB)).as("text"))
+    intercept[Exception] {
+      DedupStore.ingestExact(crashing, root, "2024-01-02")
+    }
+    // the crash must leave day 2 UNCOMMITTED (loud — committedDays
+    // names the gap), not a live marker over its cleared digests,
+    // which would silently let every later twin of 12 through
+    assert(DedupStore.committedDays(spark, root) === Seq("2024-01-01"),
+      "crashed re-ingest must leave the day uncommitted")
+
+    // recovery is the documented one: re-ingest the day
+    DedupStore.ingestExact(day2, root, "2024-01-02")
+    assert(DedupStore.committedDays(spark, root) === Seq("2024-01-01", "2024-01-02"))
+    assert(ids(DedupStore.ingestExact(docs(71L -> baseB), root, "2024-01-03"))
+      === Set.empty, "the re-ingested day must suppress its twins again")
+  }
+
   test("re-running a committed day is idempotent and never self-suppresses") {
     val root = Files.createTempDirectory("dstore-rerun").toString
     DedupStore.ingest(day1, root, "2024-01-01")
