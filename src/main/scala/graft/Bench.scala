@@ -85,7 +85,7 @@ object Bench {
     // restricts the suite (the recorded artifact always runs the full
     // set). Filters the BENCH subset — a non-bench query's timing is
     // not comparable to the recorded artifact, so it is not selectable
-    // here (run it via PlanProbe/ScaleBench instead).
+    // here (run it via graft.tools.FinalPlan/ScaleBench instead).
     val benchSet = QueryRegistry.all.filter(_.bench)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     val benchQs = only.fold(benchSet)(f => benchSet.filter(q => f(q.name)))

@@ -84,8 +84,7 @@ object PlanAudit {
         topK = 5)
       // round 16: the RESIDUAL ADC serving probe (q151's shape) — same
       // code-bytes-only scan and broadcast-LUT join as q150; the
-      // residual shift lives entirely in the driver-built LUT values,
-      // so the PLAN must be identical in shape to the raw probe's
+      // residual shift lives in the per-(query, cell) LUT projection
       val resRoot = "/tmp/graft-planaudit-ivfres"
       val rp = new org.apache.hadoop.fs.Path(resRoot)
       rp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(rp, true)

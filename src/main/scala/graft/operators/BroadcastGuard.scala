@@ -71,39 +71,16 @@ object BroadcastGuard {
     sized(df, what)(df)
 
   /** Hard cap on a DRIVER-SIDE probe batch (round 16) — the refusal
-    * the store probes ([[IvfStore.adcProbe]],
-    * [[TextIndexStore.topKBatch]]) apply BEFORE chunking: under the
-    * cap a batch is sharded internally into broadcast-sized chunks;
-    * past it the call refuses loudly, because a query list that big
-    * lives in driver memory twice (the caller's Seq plus the per-chunk
-    * frames) and belongs in a TABLE joined against the store instead.
-    * Conf `graft.maxProbeBatch`, counted in queries. */
+    * the store probes' list forms ([[IvfStore.adcProbe]],
+    * [[TextIndexStore.topKBatch]]) apply before serving the list
+    * through their table forms: past the cap the call refuses loudly,
+    * because a query list that big lives in driver memory twice (the
+    * caller's Seq plus its local query frame) and belongs in a TABLE
+    * joined against the store instead. Conf `graft.maxProbeBatch`,
+    * counted in queries. */
   val DefaultProbeBatch = 100000
 
   def probeBatchCap(s: SparkSession): Int =
     s.conf.getOption("graft.maxProbeBatch").map(_.toInt)
       .getOrElse(DefaultProbeBatch)
-
-  /** Greedy whole-item chunks: consecutive items grouped so each
-    * chunk's summed `weight` stays ≤ `cap` (one overweight item still
-    * gets its own chunk — per-item bounds are the caller's contract).
-    * The probe batches chunk with this so each chunk's broadcast
-    * frame honors [[cap]] while whole queries never split across
-    * chunks — per-query results are chunk-independent, so the union
-    * of chunk answers is exactly the unchunked answer. */
-  def greedyChunks[A](items: Seq[A], cap: Long)(weight: A => Long): Seq[Seq[A]] = {
-    val out = Seq.newBuilder[Seq[A]]
-    var cur = Seq.newBuilder[A]
-    var w = 0L
-    var n = 0
-    items.foreach { it =>
-      val iw = weight(it)
-      if (n > 0 && w + iw > cap) {
-        out += cur.result(); cur = Seq.newBuilder[A]; w = 0L; n = 0
-      }
-      cur += it; w += iw; n += 1
-    }
-    if (n > 0) out += cur.result()
-    out.result()
-  }
 }

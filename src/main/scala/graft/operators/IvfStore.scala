@@ -505,14 +505,53 @@ object IvfStore {
       Seq("dt", "cell"))
   }
 
-  /** ADC top-k over the committed CODES — [[probe]]'s serving shape
-    * with the PQ memory story made real in the scan: the probed
-    * cells' code files are read (dt AND cell partition pruning, m
-    * ints per row), each (query, row) pair costs m lookups into a
-    * per-query table built driver-side, and the float vectors are
-    * touched only when `rerank > 0` — then just for the top-`rerank`
-    * ADC candidates per query (a broadcast join of ≤ |Q|·rerank rows
-    * against the pruned cells, never a corpus scan).
+  /** ADC top-k for a DRIVER-SIDE query list — [[adcProbeTable]] over
+    * the list as a local query frame, so both forms run one scoring
+    * pipeline. The list is validated before it is served, and refuses
+    * where the table form corrupt-drops:
+    *  - a batch past `graft.maxProbeBatch` — that much driver-resident
+    *    query state belongs in a table joined against the store;
+    *  - an `idCol` that is not the store's id column (the first data
+    *    column by [[append]]'s write order) — a silently-ignored
+    *    mismatch would mislabel every returned id;
+    *  - a null or wrong-dim query vector.
+    * An empty list is a valid no-op probe: the schema-stable empty
+    * answer.
+    *
+    * Returns (qid, <id>, adc_d2, rank) — or (qid, <id>, dist2, rank)
+    * with EXACT float distances when `rerank >= topK` re-scores. */
+  def adcProbe(spark: SparkSession, root: String, idCol: String,
+      queries: Seq[(Long, Array[Double])], nprobe: Int, topK: Int,
+      rerank: Int = 0): DataFrame =
+    adcServe(spark, root, nprobe, topK, rerank) { (model, rowId) =>
+      import spark.implicits._
+      val batchCap = BroadcastGuard.probeBatchCap(spark)
+      require(queries.size <= batchCap,
+        s"probe batch of ${queries.size} queries exceeds the probe-batch " +
+          s"cap ($batchCap; conf graft.maxProbeBatch) — a driver-side query " +
+          "list this size belongs in a table; join it against the store")
+      require(rowId == idCol,
+        s"idCol '$idCol' is not this store's id column '$rowId' (the first " +
+          "data column by append's write order) — a silently-ignored " +
+          "mismatch would mislabel every returned id")
+      queries.foreach { case (qid, qv) =>
+        require(qv != null && qv.length == model.dim,
+          s"query $qid has ${if (qv == null) "no" else s"${qv.length}-dim"} " +
+            s"vector; the store serves dim ${model.dim}")
+      }
+      (queries.map { case (qid, qv) => (qid, qv.toSeq) }.toDF("qid", "__q_vec"),
+        "qid", "__q_vec")
+    }
+
+  /** TABLE-DRIVEN ADC top-k over the committed CODES — [[probe]]'s
+    * serving shape with the PQ memory story made real in the scan.
+    * The queries live in a DataFrame (`qidCol`, `qvecCol:
+    * array<numeric>[dim]`); [[adcProbe]] serves a driver-side list
+    * through this same plan. The probed cells' code files are read
+    * (dt AND cell partition pruning, m ints per row), each (query,
+    * row) pair costs m lookups into the query's lookup table, and the
+    * float vectors are touched only when `rerank > 0` — then just for
+    * the top-`rerank` ADC candidates per query.
     *
     * ADC distance is the EXACT L2 to the code's reconstruction (the
     * PqSpec identity; under residual codes the reconstruction is
@@ -522,25 +561,59 @@ object IvfStore {
     * committed corpus — the q150/q151 oracle gates' argument,
     * mirroring q146's for the float probe.
     *
-    * BATCH SHAPE (round 16): the (query, cell) pair frame rides a
-    * broadcast, so the batch is chunked INTERNALLY under
-    * `graft.maxBroadcastRows` — whole queries per chunk, per-chunk
-    * ADC frames unioned BEFORE the one rank window (chunk-count-
-    * invariant: the window partitions by qid and chunks are disjoint
-    * by qid) — instead of making callers shard (the round-15 shape
-    * q150 hand-chunked around). Batches past `graft.maxProbeBatch`
-    * refuse loudly — that much driver-resident query state belongs in
-    * a table. `idCol` must name the store's actual id column (the
-    * first data column by [[append]]'s write order) — a mismatch
-    * refuses instead of being silently ignored (round 16, advice).
+    * Plan: one row-local projection per query (distances to the k
+    * centroid literals; probed cells = the `nprobe` (dist², index)-
+    * smallest via an array_sort over structs — the
+    * [[KMeans.assign]] tie rule; per probed cell the m×|book| LUT
+    * from `q` or `q − centroid`), exploded to (qid, lut, cell) and
+    * joined to the committed codes on `cell`. The query side rides
+    * [[BroadcastGuard.maybeBroadcast]]: under `graft.maxBroadcastRows`
+    * the join broadcasts; past it both sides SHUFFLE on `cell` (the
+    * scale path — executor-bounded, never a driver build). The two
+    * strategies are result-identical.
     *
-    * Returns (qid, <id>, adc_d2, rank) — or (qid, <id>, dist2, rank)
-    * with EXACT float distances when `rerank >= topK` re-scores. */
-  def adcProbe(spark: SparkSession, root: String, idCol: String,
-      queries: Seq[(Long, Array[Double])], nprobe: Int, topK: Int,
-      rerank: Int = 0): DataFrame = {
+    * TWO-PHASE CELL PRUNING: the probed-cell UNION across the whole
+    * batch is bounded by the centroid count k — driver-safe by
+    * construction — so phase 1 runs ONE narrow job over the query
+    * table (row-local centroid distances → probed cells, exploded and
+    * distinct-ed to ≤ k ints) and phase 2 plans the codes scan with
+    * `cell IN (probed)`, so the file index prunes every unprobed cell
+    * dir (an IN over every cell reads every file). The price is that
+    * one extra pass over the query table's vectors (k·dim flops per
+    * query, no LUT work) — cheap next to the code bytes it prunes.
+    *
+    * RERANK: `rerank >= topK` re-scores the per-qid top-`rerank` ADC
+    * candidates against their exact float vectors — the candidate
+    * (qid, id, dt, cell) keys join back to `cells` partition-pruned
+    * by the SAME probed-cell set, query vectors rejoin by qid, and
+    * the exact distances re-rank to topK. All in-plan (AQE picks
+    * broadcast vs shuffle from runtime sizes).
+    *
+    * Unusable query rows (null qid, null / wrong-dim / non-finite
+    * vector) corrupt-DROP — a table cannot be pre-validated without a
+    * second scan, so the engine-wide seam discipline applies. The
+    * cell collection and the broadcast guard each run one job over
+    * the query table (an expensive-to-recompute query frame should be
+    * cached by the caller).
+    *
+    * Returns (qid, <id>, adc_d2, rank ≤ topK) — or (qid, <id>,
+    * dist2, rank ≤ topK) with EXACT float distances when
+    * `rerank >= topK`. */
+  def adcProbeTable(spark: SparkSession, root: String,
+      queries: DataFrame, qidCol: String, qvecCol: String,
+      nprobe: Int, topK: Int, rerank: Int = 0): DataFrame =
+    adcServe(spark, root, nprobe, topK, rerank)((_, _) =>
+      (queries, qidCol, qvecCol))
+
+  /** The one ADC scoring pipeline under [[adcProbe]] and
+    * [[adcProbeTable]]. `queriesFor` receives the committed codebooks
+    * and the store's id column once the store state has been checked,
+    * and returns the query frame with its qid and vector columns —
+    * the driver-list form validates its list there. */
+  private def adcServe(spark: SparkSession, root: String, nprobe: Int,
+      topK: Int, rerank: Int)(
+      queriesFor: (PqModel, String) => (DataFrame, String, String)): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import spark.implicits._
     require(nprobe >= 1 && topK >= 1, "nprobe/topK must be >= 1")
     require(rerank <= 0 || rerank >= topK,
       s"rerank=$rerank must be >= topK=$topK (it is the ADC candidate " +
@@ -570,232 +643,11 @@ object IvfStore {
     require(codeLeaves.nonEmpty, s"store at $root has committed days but " +
       "no encoded vectors (every appended row was empty or unusable) — " +
       "nothing to probe")
-    val batchCap = BroadcastGuard.probeBatchCap(spark)
-    require(queries.size <= batchCap,
-      s"probe batch of ${queries.size} queries exceeds the probe-batch " +
-        s"cap ($batchCap; conf graft.maxProbeBatch) — a driver-side query " +
-        "list this size belongs in a table; join it against the store")
     val csch = leafDataSchema(spark, codeLeaves.head.getPath)
       .add("dt", org.apache.spark.sql.types.StringType)
       .add("cell", org.apache.spark.sql.types.IntegerType)
     val rowId = csch.fieldNames(0)
-    require(rowId == idCol,
-      s"idCol '$idCol' is not this store's id column '$rowId' (the first " +
-        "data column by append's write order) — a silently-ignored " +
-        "mismatch would mislabel every returned id")
-    if (queries.isEmpty) {
-      // schema-stable empty answer for an empty batch (round 17,
-      // advice): greedyChunks yields zero chunks and the chunk union
-      // would otherwise die on empty.reduce — an empty batch is a
-      // valid no-op probe, the topKBatch/adcRecallReport stance. The
-      // distance column name follows the rerank arm the caller chose.
-      import org.apache.spark.sql.types._
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("qid", LongType), csch.fields(0),
-          StructField(if (rerank <= 0) "adc_d2" else "dist2", DoubleType),
-          StructField("rank", IntegerType, nullable = false))))
-    }
-    // driver-side per-query work: probed cells (|Q|·k·d flops, the
-    // probeCells shape) plus the ADC lookup table (m × |book| subspace
-    // distances — the same sequential left-fold arithmetic as the
-    // column-side d2, so ADC scores are bit-identical to
-    // [[ProductQuantizer.adcTopK]]'s). Residual mode shifts the LUT
-    // per (query, probed cell): the table is built from q − centroid,
-    // so Σ lut[code] = ||(q − c) − r̂||² = ||q − (c + r̂)||² — still an
-    // exact distance to the reconstruction.
-    def l2d2(a: Array[Double], b: Seq[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < b.length) { val d = a(i) - b(i); s += d * d; i += 1 }
-      s
-    }
-    def lutOf(v: Array[Double]): Seq[Seq[Double]] =
-      (0 until model.m).map(s => model.codebooks(s).map(cw =>
-        l2d2(v.slice(s * model.subDim, (s + 1) * model.subDim), cw)))
-    queries.foreach { case (qid, qv) =>
-      require(qv != null && qv.length == model.dim,
-        s"query $qid has ${if (qv == null) "no" else s"${qv.length}-dim"} " +
-          s"vector; the store serves dim ${model.dim}")
-    }
-    val probedByQ = queries.map { case (qid, qv) =>
-      (qid, qv, cents.indices
-        .sortBy(i => (l2d2(qv, cents(i).toSeq), i)).take(nprobe))
-    }
-    val allProbed = probedByQ.flatMap(_._3).distinct
-    // internal chunking under the broadcast cap — each chunk's pair
-    // frame is ≤ cap rows; LUTs are built per chunk so peak driver
-    // allocation follows the chunk, not the batch
-    val cap = BroadcastGuard.cap(spark)
-    val chunks = BroadcastGuard.greedyChunks(probedByQ, cap)(
-      _._3.size.toLong)
-    val adc = chunks.map { ch =>
-      val pairs = ch.flatMap { case (qid, qv, probed) =>
-        if (!residual) {
-          val lut = lutOf(qv) // one LUT per query, shared across cells
-          probed.map(c => (qid, lut, c))
-        } else probed.map { c =>
-          val qEff = Array.tabulate(qv.length)(i => qv(i) - cents(c)(i))
-          (qid, lutOf(qEff), c)
-        }
-      }
-      val pairsDf = pairs.toDF("qid", "__pq_lut", "cell")
-      val probedCells = pairs.map(_._3).distinct
-      val codes = PartitionedLayout.readDays(spark, s"$root/codes", csch, days)
-        .filter(col("dt").isin(days: _*))
-        .filter(col("cell").isin(probedCells: _*))
-        // corrupt-drop hand-restored junk (the adcTopK seam rule): a
-        // null/wrong-width code array nulls the fold, and a null
-        // distance would rank FIRST under asc nulls-first
-        .filter(col("pq_codes").isNotNull && size(col("pq_codes")) === model.m)
-      codes.join(broadcast(pairsDf), "cell")
-        .select(col("qid"), col(rowId), col("dt"), col("cell"),
-          // native JIT ADC fold — bit-identical to the zip_with +
-          // try_element_at HOF (out-of-range codes null the score
-          // instead of killing the probe; see Vectors.adcFold)
-          graft.functions.Vectors.adcFold(col("pq_codes"), col("__pq_lut"))
-            .as("adc_d2"))
-        .filter(col("adc_d2").isNotNull)
-    }.reduce(_ unionByName _)
-    val pool = math.max(topK, rerank)
-    val ranked = adc.withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid"))
-          .orderBy(col("adc_d2").asc, col(rowId).asc)))
-      .filter(col("rank") <= pool)
-    if (rerank <= 0)
-      ranked.filter(col("rank") <= topK)
-        .select(col("qid"), col(rowId), col("adc_d2"), col("rank"))
-    else {
-      // exact re-score of the ADC candidate pool: join the ≤ |Q|·R
-      // candidates back to their float vectors by (dt, cell, id) —
-      // the scan is still pruned to committed days + probed cells.
-      // The candidate/query sides broadcast; both are |Q|-bounded
-      // driver products, so they chunk by qid hash under the same cap
-      // (rows known without a count job: |Q|·pool and |Q|)
-      val cands = ranked.select(col("qid"), col(rowId), col("dt"), col("cell"))
-      val vecLeaves = committedLeafFiles(f, root, days)
-      val vsch = leafDataSchema(spark, vecLeaves.head.getPath)
-      val vecCol = vsch.fieldNames(1)
-      val cells = cellsFrame(spark, root, vecLeaves.head.getPath, days,
-        dataSchema = Some(vsch))
-        .filter(col("cell").isin(allProbed: _*))
-      val qVecs = queries.map { case (qid, qv) => (qid, qv.toSeq) }
-        .toDF("qid", "__q_emb")
-      val nCandChunks = math.max(1L,
-        (queries.size.toLong * pool + cap - 1) / cap).toInt
-      // native JIT L2² — bit-identical to the zip_with+aggregate HOF
-      // (see Vectors.l2d2); the rerank leg's hot inner loop
-      val exactD2 = graft.functions.Vectors.l2d2(col(vecCol), col("__q_emb"))
-      (0 until nCandChunks).map { i =>
-        val candsCh =
-          if (nCandChunks == 1) cands
-          else cands.filter(pmod(xxhash64(col("qid")), lit(nCandChunks)) === i)
-        val qVecsCh =
-          if (nCandChunks == 1) qVecs
-          else qVecs.filter(pmod(xxhash64(col("qid")), lit(nCandChunks)) === i)
-        cells.join(broadcast(candsCh),
-            cells(rowId) === candsCh(rowId) && cells("dt") === candsCh("dt") &&
-              cells("cell") === candsCh("cell"))
-          .select(candsCh("qid"), cells(rowId), cells(vecCol), cells("dt"))
-          .join(broadcast(qVecsCh), "qid")
-          .withColumn("dist2", exactD2)
-      }.reduce(_ unionByName _)
-        .filter(col("dist2").isNotNull && !isnan(col("dist2")) &&
-          col("dist2") < lit(Double.PositiveInfinity))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("qid"))
-            .orderBy(col("dist2").asc, col(rowId).asc)))
-        .filter(col("rank") <= topK)
-        .select(col("qid"), col(rowId), col("dist2"), col("rank"))
-    }
-  }
-
-  /** TABLE-DRIVEN ADC top-k (round 16) — the batch shape
-    * [[adcProbe]]'s `graft.maxProbeBatch` refusal points at: the
-    * queries live in a DataFrame (`qidCol`, `qvecCol:
-    * array<numeric>[dim]`) and NEVER touch the driver — probed cells,
-    * the (residual-shifted) lookup tables and the ADC scores are all
-    * computed in the plan, so the batch size is bounded by cluster
-    * memory, not driver memory.
-    *
-    * Plan: one row-local projection per query (distances to the k
-    * centroid literals; probed cells = the `nprobe` (dist², index)-
-    * smallest via an array_sort over structs — the
-    * [[KMeans.assign]] tie rule; per probed cell the m×|book| LUT
-    * from `q` or `q − centroid`), exploded to (qid, lut, cell) and
-    * joined to the committed codes on `cell` — the query side rides
-    * [[BroadcastGuard.maybeBroadcast]]: under the cap this is the
-    * driver-list probe's broadcast join; past it the join SHUFFLES
-    * both sides on `cell` (the scale path — executor-bounded, never
-    * a driver build). Scores are IEEE-identical to [[adcProbe]]'s
-    * (same left-fold arithmetic; spec-asserted row-for-row).
-    *
-    * TWO-PHASE CELL PRUNING (round 17, closing round 16's honest cost
-    * (a)): the probed-cell UNION across the whole batch is bounded by
-    * the centroid count k — driver-safe by construction — so phase 1
-    * runs ONE narrow job over the query table (row-local centroid
-    * distances → probed cells, exploded and distinct-ed to ≤ k ints)
-    * and phase 2 plans the codes scan with `cell IN (probed)`,
-    * restoring the driver-list probe's file-index pruning whenever
-    * the batch probes a strict cell subset. A batch that probes every
-    * cell plans the unchanged full scan. The price is that one extra
-    * pass over the query table's vectors (k·dim flops per query,
-    * no LUT work) — cheap next to the code bytes it prunes.
-    *
-    * RERANK (round 17, the driver-list parity arm): `rerank >= topK`
-    * re-scores the per-qid top-`rerank` ADC candidates against their
-    * exact float vectors — the candidate (qid, id, dt, cell) keys
-    * join back to `cells` partition-pruned by the SAME probed-cell
-    * subset, query vectors rejoin by qid, and the exact distances
-    * re-rank to topK. All in-plan (no driver candidate list — AQE
-    * picks broadcast vs shuffle from runtime sizes); row-for-row
-    * identical to [[adcProbe]]'s rerank arm (spec-asserted, raw and
-    * residual).
-    *
-    * Honest differences from the driver-list probe: (a) unusable
-    * query vectors (null / wrong-dim / non-finite) corrupt-DROP
-    * instead of refusing — a table cannot be pre-validated without a
-    * second scan, so the engine-wide seam discipline applies; (b) the
-    * two-phase cell collection and the broadcast guard each run one
-    * extra job over the query table (an expensive-to-recompute query
-    * frame should be cached by the caller).
-    *
-    * Returns (qid, <id>, adc_d2, rank ≤ topK) — or (qid, <id>,
-    * dist2, rank ≤ topK) with EXACT float distances when
-    * `rerank >= topK`. */
-  def adcProbeTable(spark: SparkSession, root: String,
-      queries: DataFrame, qidCol: String, qvecCol: String,
-      nprobe: Int, topK: Int, rerank: Int = 0): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(nprobe >= 1 && topK >= 1, "nprobe/topK must be >= 1")
-    require(rerank <= 0 || rerank >= topK,
-      s"rerank=$rerank must be >= topK=$topK (it is the ADC candidate " +
-        "pool the exact re-score ranks from)")
-    val (model, residual) = pqState(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"store at $root has no committed PQ codebooks — enablePq first, " +
-          "or use probe() for float serving"))
-    val cents = IvfIndex.open(spark, root)
-    val days = committedDays(spark, root)
-    require(days.nonEmpty,
-      s"no committed days at $root — append at least one day before probing")
-    val f = fs(spark, root)
-    val uncovered = days.filter(d => dayHasFiles(f, root, "cells", d) &&
-      !dayHasFiles(f, root, "codes", d))
-    require(uncovered.isEmpty,
-      s"committed days ${uncovered.mkString(", ")} at $root have no PQ " +
-        "codes (appended by a pre-PQ writer?) — run backfillCodes first")
-    val codeLeaves = Option(f.globStatus(
-        new Path(s"$root/codes/dt=*/cell=*/part-*")))
-      .map(_.toSeq).getOrElse(Nil)
-      .filter(st => days.contains(
-        st.getPath.getParent.getParent.getName.stripPrefix("dt=")))
-    require(codeLeaves.nonEmpty, s"store at $root has committed days but " +
-      "no encoded vectors (every appended row was empty or unusable) — " +
-      "nothing to probe")
-    val csch = leafDataSchema(spark, codeLeaves.head.getPath)
-      .add("dt", org.apache.spark.sql.types.StringType)
-      .add("cell", org.apache.spark.sql.types.IntegerType)
-    val rowId = csch.fieldNames(0)
+    val (queries, qidCol, qvecCol) = queriesFor(model, rowId)
     // qidCol == rowId is NOT exempt (round 17, advice): the result
     // carries both the qid and the store id, so a shared name makes
     // the post-join select ambiguous — refuse with the fix named
@@ -840,7 +692,6 @@ object IvfStore {
         lit(null).cast(csch.fields(0).dataType).as(rowId),
         lit(0.0).as(if (rerank <= 0) "adc_d2" else "dist2"),
         lit(1).as("rank")).limit(0)
-    val cellSubset = probedSet.size < cents.size
     val pairs =
       if (!residual)
         usable.select(col(qidCol), lutOf(col(qvecCol)).as("__pq_lut"),
@@ -854,15 +705,14 @@ object IvfStore {
             explode(probedCells).as("cell"))
           .select(col(qidCol), lutOf(qEff).as("__pq_lut"), col("cell"))
       }
-    val codes0 = PartitionedLayout.readDays(spark, s"$root/codes", csch, days)
-      .filter(col("dt").isin(days: _*))
     // phase 2: the `cell IN (probed)` filter lands on the partition
-    // column, so the file index prunes unprobed cell dirs exactly as
-    // the driver-list probe does; a batch probing EVERY cell keeps
-    // the unchanged full scan
-    val codes =
-      (if (cellSubset) codes0.filter(col("cell").isin(probedSet: _*))
-       else codes0)
+    // column, so the file index prunes unprobed cell dirs
+    val codes = PartitionedLayout.readDays(spark, s"$root/codes", csch, days)
+      .filter(col("dt").isin(days: _*))
+      .filter(col("cell").isin(probedSet: _*))
+      // corrupt-drop hand-restored junk (the adcTopK seam rule): a
+      // null/wrong-width code array nulls the fold, and a null
+      // distance would rank FIRST under asc nulls-first
       .filter(col("pq_codes").isNotNull && size(col("pq_codes")) === model.m)
     // guarded broadcast: one count over the query-derived pairs frame
     // decides broadcast vs shuffled-on-cell — result-identical either
@@ -885,7 +735,7 @@ object IvfStore {
     else {
       // in-plan exact re-rank (scaladoc): candidate keys join back to
       // their float vectors by (id, dt, cell) — the cells scan prunes
-      // by the SAME probed-cell subset plus the committed-day filter —
+      // by the SAME probed-cell set plus the committed-day filter —
       // then query vectors rejoin by qid and the exact distances
       // re-rank. No broadcast hint on either side: the candidate and
       // query frames are table-derived, so AQE sizes the joins at
@@ -895,14 +745,12 @@ object IvfStore {
       val vecLeaves = committedLeafFiles(f, root, days)
       val vsch = leafDataSchema(spark, vecLeaves.head.getPath)
       val vecCol = vsch.fieldNames(1)
-      val cells0 = cellsFrame(spark, root, vecLeaves.head.getPath, days,
+      val cells = cellsFrame(spark, root, vecLeaves.head.getPath, days,
         dataSchema = Some(vsch))
-      val cells =
-        if (cellSubset) cells0.filter(col("cell").isin(probedSet: _*))
-        else cells0
+        .filter(col("cell").isin(probedSet: _*))
       val qVecs = usable.select(col(qidCol), col(qvecCol).as("__q_emb"))
       // native JIT L2² — bit-identical to the zip_with+aggregate HOF
-      // (see Vectors.l2d2); the table-path rerank leg's inner loop
+      // (see Vectors.l2d2); the rerank leg's inner loop
       val exactD2 = graft.functions.Vectors.l2d2(col(vecCol), col("__q_emb"))
       cells.join(cands, cells(rowId) === cands(rowId) &&
           cells("dt") === cands("dt") && cells("cell") === cands("cell"))
@@ -1814,7 +1662,7 @@ object IvfStore {
     * `nprobe = k` with rerank ≥ corpus the answer is exact by
     * construction (recall 1.0 — the spec's identity row). Cost: one
     * float full probe + one ADC probe per arm over days·queriesPerDay
-    * sampled queries (all internally sharded) — maintenance cadence.
+    * sampled queries — maintenance cadence.
     *
     * Output, schema-stable, (nprobe, rerank, dt)-sorted:
     * (dt, n_queries, nprobe, rerank, topk, recall). */

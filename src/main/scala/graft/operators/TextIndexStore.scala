@@ -215,58 +215,18 @@ object TextIndexStore {
           .orderBy(col("bm25").desc, col("doc_id").asc)))
   }
 
-  /** BATCHED BM25 (round 15) — N queries, ONE postings scan. A
-    * serving workload issues many term-sets; N [[topK]] calls re-plan,
-    * re-read the stats and re-scan the index N times. This reads the
-    * UNION of all queries' terms once and fans it out:
-    *
-    *  - one postings scan filtered to the union (same dt file prune +
-    *    word row-group pushdown as the single probe — the plan's ONLY
-    *    parquet scan node, spec-pinned);
-    *  - `df` per word via a count window OVER the scan (no self-join,
-    *    no second scan — partitioned by word, the same key the
-    *    single probe's df aggregate shuffles on);
-    *  - per-(query, doc) scoring through a broadcast (qid, word, pos)
-    *    join, summed in QUERY ORDER — contributions fold sorted by
-    *    the term's position in ITS query, so each score is
-    *    bit-identical to the single call's fixed conditional-sum
-    *    chain (adding a matched term's value to the chain's 0.0
-    *    placeholders is IEEE-exact for the positive BM25 terms);
-    *  - per-qid top-k via rank-window ≤ topK — the q146
-    *    partial/final WindowGroupLimit shape, so the one qid exchange
-    *    carries ≤ topK·partitions candidates per query.
-    *
-    * Per query this costs what one [[topK]] costs on its own terms;
-    * across the batch the scan, the stats read and the planning are
-    * paid once. Returns (qid, doc_id, bm25, n_terms_hit, rank ≤ topK)
-    * — per qid exactly the rows the single call returns. Duplicate
-    * qids and duplicate terms within a query are errors (the single
-    * probe's double-count rule, batched).
-    *
-    * Bit-identity PRECONDITION (round 16, advice): "per qid exactly
-    * the single call's rows" is bit-exact on the DOUBLE when each
-    * (term, doc_id) matches at most ONE posting row — the committed
-    * view of any corpus whose doc ids are day-unique, which is what
-    * [[append]]'s one-day-one-shard ingest produces. A doc_id
-    * committed on MULTIPLE days (legal — the dup-identity fsck class)
-    * carries >1 posting per term, and the two paths then fold that
-    * term's contributions in different orders (the single probe's
-    * unordered per-term SUM vs this batch's (pos, value)-sorted
-    * chain), so scores can differ in the last ulp and reorder ties.
-    * Ranks and hit sets are unaffected beyond such ulp ties.
-    *
-    * BROADCAST GUARD (round 16 — the [[graft.operators
-    * .BroadcastGuard]] discipline the ADC twin already had): the
-    * (qid, word, pos) frame is driver-built and broadcast, so the
-    * batch is chunked internally — greedy groups of whole queries
-    * whose term rows fit `graft.maxBroadcastRows` — and the per-chunk
-    * answers union (per-qid results are chunk-independent: df is a
-    * property of the postings, not of the batch). One chunk keeps the
-    * single-scan plan the spec pins; an over-cap batch trades it for
-    * one scan per chunk instead of a driver OOM. Batches past
-    * `graft.maxProbeBatch` (default 100k queries) refuse loudly —
-    * that is a workload for a query-table join, not a driver-side
-    * probe list. */
+  /** BATCHED BM25 for a DRIVER-SIDE query list — [[topKBatchTable]]
+    * over the list as a local query frame, so both forms run one
+    * scoring pipeline. The list is validated before it is served, and
+    * refuses where the table form corrupt-drops: an empty batch,
+    * duplicate qids, a query with no terms, duplicate terms within a
+    * query (each would double-count its postings — the single
+    * probe's rule, batched), and a batch past `graft.maxProbeBatch`
+    * (default 100k queries; a list that size belongs in a query
+    * table joined against the index). Returns (qid, doc_id, bm25,
+    * n_terms_hit, rank ≤ topK) — per qid exactly the rows the single
+    * [[topK]] call returns (see [[topKBatchTable]] for the bit-identity
+    * precondition). */
   def topKBatch(spark: SparkSession, root: String,
       queries: Seq[(Long, Seq[String])], topK: Int): DataFrame = {
     require(queries.nonEmpty, "batch probe needs at least one query")
@@ -283,97 +243,73 @@ object TextIndexStore {
       s"batch of ${queries.size} queries exceeds the probe-batch cap " +
         s"($batchCap; conf graft.maxProbeBatch) — a driver-side query list " +
         "this size belongs in a table; join it against the index instead")
-    val days = committedDays(spark, root)
-    val (nDocs, avgdl) = corpusStats(spark, root, days)
-    if (nDocs == 0L) {
-      import spark.implicits._
-      return Seq.empty[(Long, Long, Double, Long, Int)]
-        .toDF("qid", "doc_id", "bm25", "n_terms_hit", "rank")
-    }
-    val cap = BroadcastGuard.cap(spark)
-    BroadcastGuard.greedyChunks(queries, cap)(_._2.size.toLong)
-      .map(ch => topKBatchChunk(spark, root, days, nDocs, avgdl, ch, topK))
-      .reduce(_ unionByName _)
-  }
-
-  /** One [[topKBatch]] chunk: the single-postings-scan body (see the
-    * plan pin in TextIndexStoreSpec). (N, avgdl) come from the
-    * CALLER's one committed snapshot, shared across chunks. */
-  private def topKBatchChunk(spark: SparkSession, root: String,
-      days: Seq[String], nDocs: Long, avgdl: Double,
-      queries: Seq[(Long, Seq[String])], topK: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import spark.implicits._
-    val allTerms = queries.flatMap(_._2).distinct
-    val posts = PartitionedLayout.readDays(
-        spark, s"$root/postings", postingsSchema, days)
-      .filter(col("dt").isin(days: _*))
-      .filter(col("word").isInCollection(allTerms))
-    val qterms = queries.flatMap { case (qid, ts) =>
-      ts.zipWithIndex.map { case (t, i) => (qid, t, i) }
-    }.toDF("qid", "word", "pos")
-    val scored = posts
-      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("word"))))
-      .withColumn("idf", log(lit(1.0) +
-        (lit(nDocs.toDouble) - col("df") + 0.5) / (col("df").cast("double") + 0.5)))
-      .withColumn("tfc", (col("tf").cast("double") * (K1 + 1.0)) /
-        (col("tf").cast("double") +
-          lit(K1) * (lit(1.0 - B) + col("dl").cast("double") / avgdl * B)))
-      .join(broadcast(qterms), "word")
-    scored
-      .groupBy(col("qid"), col("doc_id"))
-      .agg(
-        // fixed-order sum: contributions sorted by the term's position
-        // in the query, folded sequentially from 0.0 — the single
-        // call's chain order, not a float-reorderable SUM
-        aggregate(
-          array_sort(collect_list(struct(col("pos"),
-            (col("idf") * col("tfc")).as("c")))),
-          lit(0.0), (acc, x) => acc + x.getField("c")).as("bm25"),
-        count(lit(1)).as("n_terms_hit"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid"))
-          .orderBy(col("bm25").desc, col("doc_id").asc)))
-      .filter(col("rank") <= topK)
+    topKBatchTable(spark, root, queries.toDF("qid", "terms"), "qid", "terms",
+      topK)
   }
 
-  /** TABLE-DRIVEN batched BM25 (round 16) — the shape
-    * [[topKBatch]]'s `graft.maxProbeBatch` refusal points at: the
-    * queries live in a DataFrame (`qidCol`, `termsCol:
-    * array<string>` in query order) and never touch the driver, so
-    * the batch is bounded by cluster memory. The scoring pipeline is
-    * [[topKBatch]]'s exactly — df via a count window over the
-    * filtered postings, idf/tfc with the committed-snapshot
-    * (N, avgdl), per-(query, doc) contributions folded in query
-    * order, per-qid rank ≤ topK — with the driver-built pieces
-    * replaced by joins: the postings filter becomes a semi-join on
-    * the batch's DISTINCT words (guarded broadcast — under the cap
-    * the planner builds the same hash join the IN-filter path
-    * produces; past it both sides shuffle on `word`), and the
-    * (qid, word, pos) fan-out is the posexploded query table.
+  /** TABLE-DRIVEN batched BM25 — N queries, ONE postings scan. A
+    * serving workload issues many term-sets; N [[topK]] calls re-plan,
+    * re-read the stats and re-scan the index N times. The queries live
+    * in a DataFrame (`qidCol`, `termsCol: array<string>` in query
+    * order), so the batch is bounded by cluster memory;
+    * [[topKBatch]] serves a driver-side list through this same plan.
+    * The UNION of all queries' terms is read once and fanned out:
     *
-    * TWO-PHASE WORD PUSHDOWN (round 17, closing round 16's honest
-    * cost (a)): the broadcast guard already pays one count job over
-    * the batch's distinct words; when that count is under
-    * `graft.maxBroadcastRows` — i.e. exactly when the word set was
-    * going to be driver-broadcast anyway — the set is collected and
-    * the postings scan takes the single probe's `word
-    * isInCollection` filter instead of the semi-join, restoring
-    * parquet row-group pruning on `word`. Past the cap the semi-join
-    * stands (both sides shuffle on `word` — the scale path, where the
-    * batch's union covers most of the vocabulary and row-group
-    * pruning would win nothing). Result-identical either way.
+    *  - one postings scan over the batch's distinct words (same dt
+    *    file prune as the single probe — the plan's ONLY parquet scan
+    *    node, spec-pinned);
+    *  - `df` per word via a count window OVER the scan (no self-join,
+    *    no second scan — partitioned by word, the same key the single
+    *    probe's df aggregate shuffles on), idf/tfc with the
+    *    committed-snapshot (N, avgdl);
+    *  - per-(query, doc) scoring through a join with the posexploded
+    *    (qid, word, pos) query terms, summed in QUERY ORDER —
+    *    contributions fold sorted by the term's position in ITS query,
+    *    so each score is bit-identical to the single call's fixed
+    *    conditional-sum chain (adding a matched term's value to the
+    *    chain's 0.0 placeholders is IEEE-exact for the positive BM25
+    *    terms);
+    *  - per-qid top-k via rank-window ≤ topK — the q146
+    *    partial/final WindowGroupLimit shape, so the one qid exchange
+    *    carries ≤ topK·partitions candidates per query.
     *
-    * Honest differences from the driver-list form: (a) the word-set
+    * BROADCAST GUARD: the (qid, word, pos) side rides
+    * [[BroadcastGuard.maybeBroadcast]] — under `graft.maxBroadcastRows`
+    * it broadcasts; past it both sides shuffle on `word`.
+    *
+    * TWO-PHASE WORD PUSHDOWN: one count job over the batch's distinct
+    * words; when that count is under `graft.maxBroadcastRows` — i.e.
+    * exactly when the word set was going to be driver-broadcast
+    * anyway — the set is collected and the postings scan takes the
+    * single probe's `word isInCollection` filter, keeping parquet
+    * row-group pruning on `word`. Past the cap a semi-join on the
+    * distinct words stands (both sides shuffle on `word` — the scale
+    * path, where the batch's union covers most of the vocabulary and
+    * row-group pruning would win nothing). Result-identical either
+    * way.
+    *
+    * Bit-identity PRECONDITION: "per qid exactly the single call's
+    * rows" is bit-exact on the DOUBLE when each (term, doc_id)
+    * matches at most ONE posting row — the committed view of any
+    * corpus whose doc ids are day-unique, which is what [[append]]'s
+    * one-day-one-shard ingest produces. A doc_id committed on
+    * MULTIPLE days (legal — the dup-identity fsck class) carries >1
+    * posting per term, and the two paths then fold that term's
+    * contributions in different orders (the single probe's unordered
+    * per-term SUM vs this batch's (pos, value)-sorted chain), so
+    * scores can differ in the last ulp and reorder ties. Ranks and
+    * hit sets are unaffected beyond such ulp ties.
+    *
+    * Per-query duplicate terms cannot REFUSE without a validation
+    * pass, so they corrupt-DROP: `array_distinct` keeps each term's
+    * FIRST occurrence in query order (the fold order is then
+    * identical to a dup-free query); null qids and null/empty term
+    * arrays drop silently (the seam discipline). The word-set
     * count/collect and the qterms broadcast guard each run one job
     * over the query table (an expensive-to-recompute query frame
-    * should be cached by the caller); (b) per-query duplicate terms cannot
-    * REFUSE without a validation pass, so they corrupt-DROP instead:
-    * `array_distinct` keeps each term's FIRST occurrence in query
-    * order (the fold order is then identical to a dup-free query);
-    * null qids and null/empty term arrays drop silently (the seam
-    * discipline). Returns (qid, doc_id, bm25, n_terms_hit,
-    * rank ≤ topK). */
+    * should be cached by the caller). Returns (qid, doc_id, bm25,
+    * n_terms_hit, rank ≤ topK). */
   def topKBatchTable(spark: SparkSession, root: String,
       queries: DataFrame, qidCol: String, termsCol: String,
       topK: Int): DataFrame = {
@@ -417,6 +353,9 @@ object TextIndexStore {
     scored
       .groupBy(col("qid"), col("doc_id"))
       .agg(
+        // fixed-order sum: contributions sorted by the term's position
+        // in the query, folded sequentially from 0.0 — the single
+        // call's chain order, not a float-reorderable SUM
         aggregate(
           array_sort(collect_list(struct(col("pos"),
             (col("idf") * col("tfc")).as("c")))),

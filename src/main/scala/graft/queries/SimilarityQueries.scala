@@ -809,8 +809,9 @@ object SimilarityQueries {
       GROUP BY e.q_vec"""))
 
   /** ORACLE-GATED PQ-ENCODED STORE SERVING (round 15) — the
-    * CORRECTNESS row for [[graft.operators.IvfStore.adcProbe]]: the
-    * q146 lifecycle (init + enablePq + two appended days into a
+    * CORRECTNESS row for [[graft.operators.IvfStore.adcProbe]], and so
+    * for [[graft.operators.IvfStore.adcProbeTable]], the one scoring
+    * pipeline the list form serves through: the q146 lifecycle (init + enablePq + two appended days into a
     * scratch root) probed through the CODES table at `nprobe = k`.
     * Full-probe ADC is EXACT brute force over the reconstructed
     * committed corpus (ADC distance ≡ L2 to the reconstruction — the
@@ -866,8 +867,7 @@ object SimilarityQueries {
             e.filter(pmod($"vec_id", lit(2)) === 1), root, "day-2")
           val queries = qRows.map(r => (r.getLong(0),
             r.getSeq[Float](1).map(_.toDouble).toArray)).sortBy(_._1).toSeq
-          // the store shards the batch internally under the broadcast
-          // cap since round 16 — one call, chunk-count-invariant
+          // one call: the store's broadcast guard sizes the join
           graft.operators.IvfStore.adcProbe(s, root,
               "vec_id", queries, nprobe = 8, topK = 5)
             .localCheckpoint() // materialize before the root vanishes

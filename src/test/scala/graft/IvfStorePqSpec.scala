@@ -541,7 +541,7 @@ class IvfStorePqSpec extends AnyFunSuite with SparkSpec {
       "fixture check: the ghost id must actually be servable")
   }
 
-  test("adcProbe shards internally under the broadcast cap (chunk-count-invariant, rerank included); refuses a wrong idCol and a batch past graft.maxProbeBatch") {
+  test("adcProbe over the broadcast cap returns the under-cap rows (rerank included); refuses a wrong idCol and a batch past graft.maxProbeBatch") {
     val root = Files.createTempDirectory("ivfpq-shard").toString
     val day1 = mkRows(0 until 30)
     IvfStore.init(vecs(day1), "vec_id", "embedding", root, k = 3, iters = 3)
@@ -555,11 +555,12 @@ class IvfStorePqSpec extends AnyFunSuite with SparkSpec {
       .sortBy(t => (t._1, t._4)).toSeq
     val (base, baseR) = (run(0), run(5))
     try {
-      // 10 queries × 2 probed cells = 20 pair rows; cap 3 → 7 chunks,
-      // and the rerank candidate broadcast (10×5 rows) chunks too
-      spark.conf.set("graft.maxBroadcastRows", "3")
-      assert(run(0) === base, "chunked ADC diverged from unchunked")
-      assert(run(5) === baseR, "chunked rerank diverged from unchunked")
+      // 10 queries × 2 probed cells = 20 pair rows; at cap 1 the pair
+      // side loses its broadcast hint and the join shuffles on cell —
+      // rows must be identical (the BroadcastGuard contract)
+      spark.conf.set("graft.maxBroadcastRows", "1")
+      assert(run(0) === base, "over-cap ADC diverged from the broadcast plan")
+      assert(run(5) === baseR, "over-cap rerank diverged from the broadcast plan")
       spark.conf.set("graft.maxProbeBatch", "5")
       val e = intercept[IllegalArgumentException] { run(0) }
       assert(e.getMessage.contains("graft.maxProbeBatch"), e.getMessage)
@@ -574,67 +575,76 @@ class IvfStorePqSpec extends AnyFunSuite with SparkSpec {
     assert(e2.getMessage.contains("id column"), e2.getMessage)
   }
 
-  test("adcProbeTable == adcProbe row-for-row (raw + residual); unusable query rows corrupt-drop; the over-cap shuffled fallback is result-identical") {
+  test("adcProbeTable at nprobe=2 == brute force over the reconstructions in each query's probed cells (raw + residual, rerank included); unusable query rows corrupt-drop; the over-cap shuffled fallback is result-identical") {
     val s = spark
     import s.implicits._
-    def build(residual: Boolean): String = {
+    def build(residual: Boolean): (String, Seq[(Long, Array[Double])]) = {
       val root = Files.createTempDirectory(s"ivfpq-tab-$residual").toString
       val day1 = mkRows(0 until 30)
+      val day2 = mkRows(100 until 130)
       IvfStore.init(vecs(day1), "vec_id", "embedding", root, k = 3, iters = 3)
       IvfStore.append(vecs(day1), root, "2024-07-01")
-      IvfStore.append(vecs(mkRows(100 until 130)), root, "2024-07-02")
+      IvfStore.append(vecs(day2), root, "2024-07-02")
       IvfStore.enablePq(spark, root, m = M, k = 4, iters = 2,
         residual = residual): Unit
-      root
+      (root, day1 ++ day2)
     }
     val queries = (0 until 9).map(i => (3000L + i) -> around(centers(i % 3)))
     val qtab = queries.map { case (q, v) => (q, v.toSeq) }.toDF("qid", "qv")
+    def rowsOf(df: DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+      .sortBy(t => (t._1, t._4)).toSeq
     for (residual <- Seq(false, true)) {
-      val root = build(residual)
-      def fromList = IvfStore.adcProbe(spark, root, "vec_id", queries,
-          nprobe = 2, topK = 4).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-        .sortBy(t => (t._1, t._4)).toSeq
-      def fromTable = IvfStore.adcProbeTable(spark, root, qtab, "qid", "qv",
-          nprobe = 2, topK = 4).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-        .sortBy(t => (t._1, t._4)).toSeq
-      val expect = fromList
-      assert(fromTable === expect,
-        s"table path diverged from the driver-list path (residual=$residual)")
+      val (root, corpus) = build(residual)
+      val model = IvfStore.pqModel(spark, root).get
+      val cents = IvfIndex.open(spark, root)
+      def cellOf(v: Array[Double]): Int =
+        cents.indices.minBy(i => (l2d2(v, cents(i).toSeq), i))
+      // test-side reference: each query's 2 probed cells by the
+      // (d², index) rule, then brute-force ADC over the corpus rows
+      // assigned to those cells; rerank re-scores the top-40 ADC pool
+      // with exact float distances. topK = 30 exceeds a cell's ~20
+      // rows, so the answer depends on WHICH cells are probed
+      val (expect, expectR) = queries.map { case (qid, qv) =>
+        val probed = cents.indices
+          .sortBy(i => (l2d2(qv, cents(i).toSeq), i)).take(2).toSet
+        val inProbed = corpus.filter { case (_, v) => probed(cellOf(v)) }
+        assert(inProbed.size < corpus.size, "fixture: nprobe=2 must skip a cell")
+        def adc(n: Int) =
+          if (residual) expectResidualAdc(model, cents, inProbed, qv, n)
+          else expectAdc(model, inProbed, qv, n)
+        val vecOf = inProbed.toMap
+        def ranked(xs: Seq[(Long, Double)]) =
+          xs.zipWithIndex.map { case ((id, d2), i) => (qid, id, d2, i + 1) }
+        (ranked(adc(30)),
+          ranked(adc(40).map { case (id, _) => (id, l2d2(vecOf(id), qv.toSeq)) }
+            .sortBy { case (id, d2) => (d2, id) }.take(30)))
+      }.unzip
+      def fromTable = rowsOf(IvfStore.adcProbeTable(spark, root, qtab, "qid",
+        "qv", nprobe = 2, topK = 30))
+      assert(fromTable === expect.flatten,
+        s"table path diverged from the brute-force reference (residual=$residual)")
       // over the cap: the pairs side stops broadcasting and the join
       // shuffles on cell — rows must be identical (BroadcastGuard's
       // result-identity contract)
       try {
         spark.conf.set("graft.maxBroadcastRows", "1")
-        assert(fromTable === expect,
+        assert(fromTable === expect.flatten,
           s"shuffled-fallback table path diverged (residual=$residual)")
       } finally spark.conf.unset("graft.maxBroadcastRows")
       // unusable query rows (null / wrong-dim) corrupt-drop silently
       val poisoned = qtab.unionByName(
         Seq((9900L, Seq.fill(Dim + 1)(0.0)), (9901L, null.asInstanceOf[Seq[Double]]))
           .toDF("qid", "qv"))
-      val got = IvfStore.adcProbeTable(spark, root, poisoned, "qid", "qv",
-          nprobe = 2, topK = 4).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-        .sortBy(t => (t._1, t._4)).toSeq
-      assert(got === expect,
+      assert(rowsOf(IvfStore.adcProbeTable(spark, root, poisoned, "qid", "qv",
+          nprobe = 2, topK = 30)) === expect.flatten,
         s"poisoned rows must drop, not poison the batch (residual=$residual)")
-      // the in-plan rerank arm (round 17): exact float re-score of the
-      // ADC pool, row-for-row the driver-list rerank's answer
-      def fromListR = IvfStore.adcProbe(spark, root, "vec_id", queries,
-          nprobe = 2, topK = 4, rerank = 6).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-        .sortBy(t => (t._1, t._4)).toSeq
-      def fromTableR = IvfStore.adcProbeTable(spark, root, qtab, "qid", "qv",
-          nprobe = 2, topK = 4, rerank = 6).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-        .sortBy(t => (t._1, t._4)).toSeq
-      assert(fromTableR === fromListR,
-        s"table rerank diverged from the driver-list rerank (residual=$residual)")
-      assert(IvfStore.adcProbeTable(spark, root, qtab, "qid", "qv",
-          nprobe = 2, topK = 4, rerank = 6).columns.toSeq ===
-        Seq("qid", "vec_id", "dist2", "rank"))
+      // the in-plan rerank arm: exact float re-score of the ADC pool
+      val tableR = IvfStore.adcProbeTable(spark, root, qtab, "qid", "qv",
+        nprobe = 2, topK = 30, rerank = 40)
+      assert(tableR.columns.toSeq === Seq("qid", "vec_id", "dist2", "rank"))
+      assert(rowsOf(tableR) === expectR.flatten,
+        s"table rerank diverged from the brute-force reference (residual=$residual)")
     }
   }
 

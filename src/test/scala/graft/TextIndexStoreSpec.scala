@@ -438,7 +438,7 @@ class TextIndexStoreSpec extends AnyFunSuite with SparkSpec {
       Seq("qid", "doc_id", "bm25", "n_terms_hit", "rank"))
   }
 
-  test("topKBatch shards internally under the broadcast cap (chunk-count-invariant); refuses only past graft.maxProbeBatch") {
+  test("topKBatch over the broadcast cap returns the under-cap rows; refuses only past graft.maxProbeBatch") {
     val r = tmpRoot("batchguard")
     TextIndexStore.append(docsDf(docs.take(3)), r, "day-1"): Unit
     TextIndexStore.append(docsDf(docs.drop(3)), r, "day-2"): Unit
@@ -451,10 +451,11 @@ class TextIndexStoreSpec extends AnyFunSuite with SparkSpec {
         x.getInt(4))).sortBy(t => (t._1, t._5)).toSeq
     val base = run()
     try {
-      // 6 total term rows at cap 2 → three whole-query chunks; the
-      // union must be bit-identical to the single-broadcast answer
-      spark.conf.set("graft.maxBroadcastRows", "2")
-      assert(run() === base, "chunked batch diverged from the unchunked one")
+      // 6 term rows over 3 distinct words at cap 1: the word set and
+      // the query terms stop broadcasting (semi-join and shuffled
+      // join) — the rows must be bit-identical to the broadcast plan's
+      spark.conf.set("graft.maxBroadcastRows", "1")
+      assert(run() === base, "over-cap batch diverged from the broadcast plan")
       // refusal is a separate, much larger knob — and it names itself
       spark.conf.set("graft.maxProbeBatch", "2")
       val e = intercept[IllegalArgumentException] {
@@ -467,7 +468,7 @@ class TextIndexStoreSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("topKBatchTable == topKBatch row-for-row; duplicate terms keep first occurrence; over-cap shuffled fallback identical; empty store typed-empty") {
+  test("topKBatchTable == one topK call per qid; duplicate terms keep first occurrence; over-cap shuffled fallback identical; empty store typed-empty") {
     val s = spark
     import s.implicits._
     val r = tmpRoot("batchtable")
@@ -477,10 +478,14 @@ class TextIndexStoreSpec extends AnyFunSuite with SparkSpec {
       10L -> Seq("the", "of"),
       20L -> Seq("and"),
       30L -> Seq("the", "and", "of"))
-    val expect = TextIndexStore.topKBatch(spark, r, queries, topK = 10)
-      .collect()
-      .map(x => (x.getLong(0), x.getLong(1), x.getDouble(2), x.getLong(3),
-        x.getInt(4))).sortBy(t => (t._1, t._5)).toSeq
+    // the reference: one single-query topK call per qid
+    def single(terms: Seq[String]) =
+      TextIndexStore.topK(spark, r, terms, topK = 10).collect()
+        .map(x => (x.getLong(0), x.getDouble(1), x.getLong(2), x.getInt(3)))
+        .sortBy(_._4).toSeq
+    val expect = queries.flatMap { case (qid, terms) =>
+      single(terms).map { case (d, b, h, rk) => (qid, d, b, h, rk) }
+    }
     val qtab = queries.toDF("qid", "terms")
     def fromTable(df: org.apache.spark.sql.DataFrame) =
       TextIndexStore.topKBatchTable(spark, r, df, "qid", "terms", topK = 10)
@@ -494,10 +499,7 @@ class TextIndexStoreSpec extends AnyFunSuite with SparkSpec {
     // equal the dup-free query's
     val dup = Seq(40L -> Seq("the", "the", "of")).toDF("qid", "terms")
     val dupGot = fromTable(dup).map { case (_, d, b, h, rk) => (d, b, h, rk) }
-    val dupWant = TextIndexStore.topKBatch(spark, r, Seq(40L -> Seq("the", "of")),
-        topK = 10).collect()
-      .map(x => (x.getLong(1), x.getDouble(2), x.getLong(3), x.getInt(4)))
-      .sortBy(_._4).toSeq
+    val dupWant = single(Seq("the", "of"))
     assert(dupGot === dupWant, "dup terms must fold like their dedup'd query")
     // under-cap two-phase pushdown (round 17): the collected word set
     // rides the postings scan as `word IN (…)` — row-group pruning
